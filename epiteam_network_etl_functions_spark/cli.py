@@ -15,6 +15,9 @@ Stages are restartable exactly like the reference's ``side_results/``
 pattern: each stage writes parquet/npy/GraphML into ``--out`` and later
 stages re-read those files when run in a separate invocation
 (NetworkBuilder.py:264-284 stage graph; the IR between stages is files).
+The same rule holds inside one invocation: a stage continues from its IR
+read back, never from the lazy plan that wrote it, so every intermediate
+is computed exactly once however many consumers it has.
 
 Input is either a real pings parquet (``--pings`` with columns caid,
 cdmx_datetime, latitude, longitude, horizontal_accuracy, plus ``--dim``
@@ -28,12 +31,13 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .constants import SENTINEL_AGEB_13
-from .operators.colocation import colocation_edges, colocation_pairs
+from .operators.colocation import colocation_edges
 from .operators.components import connected_components_star
 from .operators.contacts import group_sizes
 from .operators.graphs import (
@@ -48,7 +52,6 @@ from .operators.seir import run_gillespie_sweep, trajectory_stats
 from .operators.timebucket import with_time_bucket
 from .plans.contact_matrix import contact_prob_table, probs_to_matrix
 from .plans.mobility import (
-    attach_home,
     daily_home_winners,
     extract_day,
     impute_neighbour_frequency_labels,
@@ -82,17 +85,26 @@ def _out(args: argparse.Namespace, name: str) -> str:
     return os.path.join(args.out, name)
 
 
-def _read_or(spark: SparkSession, path: str, compute, what: str) -> DataFrame:
-    """Stage IR: prefer the parquet a previous invocation left behind."""
-    if os.path.exists(path):
-        print(f"# {what}: reusing {path}", file=sys.stderr)
-        return spark.read.parquet(path)
-    return compute()
+def _write_ir(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Materialize one stage IR and continue from the parquet read back.
+    Pinning the schema skips the footer-inference job of a plain read."""
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
+
+
+def _read_ir(spark: SparkSession, args: argparse.Namespace, name: str) -> DataFrame:
+    """Stage IR a previous invocation left behind."""
+    path = _out(args, f"{name}.parquet")
+    if not os.path.exists(path):
+        sys.exit(f"no {path}: run --gen-tables first")
+    print(f"# {name}: reusing {path}", file=sys.stderr)
+    return spark.read.parquet(path)
 
 
 def gen_tables(spark, args) -> dict[str, DataFrame]:
-    """Stage 1 (NetworkBuilder.get_tables): located pings -> homes ->
-    interactions; writes homes/interactions/located parquet."""
+    """Stage 1 (NetworkBuilder.get_tables): located pings -> interactions
+    -> homes; writes located/interactions/homes parquet and returns them
+    read back."""
     pings, dim, cell_expr = _load_inputs(spark, args)
     if args.day == "all":
         # multi-day run (S3 trusted-range shape): accuracy gate only
@@ -100,21 +112,22 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
     else:
         sliced = extract_day(pings, args.day, min_accuracy=args.min_accuracy)
     day = with_cells(sliced, out_col="h3index_15", cell_expr=cell_expr)
-    located = locate_pings(day, dim).cache()
+    paths = {n: _out(args, f"{n}.parquet") for n in ("located", "interactions", "homes")}
+    located = _write_ir(spark, locate_pings(day, dim), paths["located"])
+    # Co-location reads only (caid, cell, tw) and dedups presence, so it
+    # needs no home attached (a left join cannot move min(ts) either).
+    bucketed = with_time_bucket(located, "cdmx_datetime", args.bucket_seconds)
+    interactions = _write_ir(
+        spark,
+        colocation_edges(bucketed, id_col="caid", cell_col="h3index_15", tw_col="tw"),
+        paths["interactions"],
+    )
     scores = night_presence_scores(located, bucket_seconds=args.bucket_seconds)
     winners = daily_home_winners(scores)
     homes = (
         locate_pings(winners.withColumnRenamed("home_cell", "h3index_15"), dim)
         .withColumn("home_ageb", F.coalesce(F.col("cve_geo"), F.lit(SENTINEL_AGEB_13)))
         .select("caid", "home_ageb", "score", "confidence")
-    )
-    bucketed = with_time_bucket(
-        attach_home(located, homes.select("caid", "home_ageb")),
-        "cdmx_datetime",
-        args.bucket_seconds,
-    )
-    interactions = colocation_edges(
-        bucketed, id_col="caid", cell_col="h3index_15", tw_col="tw"
     )
     if args.impute_rounds > 0:
         comp = connected_components_star(interactions, a_col="a_caid", b_col="b_caid")
@@ -123,20 +136,26 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
         homes = impute_neighbour_frequency_labels(
             homes, comp, rounds=args.impute_rounds
         )
+    homes = _write_ir(spark, homes, paths["homes"])
     if args.quality_gate:
         # Declarative stage gate (the reference's logged sanity counts,
-        # SURVEY.md §5, as enforced invariants): one agg pass per table.
+        # SURVEY.md §5, as enforced invariants): one agg pass per table,
+        # over the IR exactly as later stages and restarts will read it.
         from .operators.quality import assert_rules, matches, not_null, unique
 
-        assert_rules(homes, [unique("caid"), not_null("home_ageb"),
-                             matches("home_ageb", "^[0-9]{13}$")])
-        assert_rules(interactions, [not_null("a_caid"), not_null("b_caid")])
+        try:
+            assert_rules(homes, [unique("caid"), not_null("home_ageb"),
+                                 matches("home_ageb", "^[0-9]{13}$")])
+            assert_rules(interactions, [not_null("a_caid"), not_null("b_caid")])
+        except Exception:
+            # IR that did not pass the gate, for whatever reason, must not
+            # survive for a restart to reuse
+            for path in paths.values():
+                shutil.rmtree(path, ignore_errors=True)
+            raise
         print("# gen-tables: quality gate passed (homes unique/13-char, "
               "interactions non-null)", file=sys.stderr)
-    homes.write.mode("overwrite").parquet(_out(args, "homes.parquet"))
-    interactions.write.mode("overwrite").parquet(_out(args, "interactions.parquet"))
-    located.write.mode("overwrite").parquet(_out(args, "located.parquet"))
-    print(f"# gen-tables: wrote homes/interactions/located under {args.out}",
+    print(f"# gen-tables: wrote located/interactions/homes under {args.out}",
           file=sys.stderr)
     return {"located": located, "homes": homes, "interactions": interactions}
 
@@ -145,20 +164,22 @@ def prob_matrix(spark, args, tables: dict | None) -> DataFrame:
     """Stage 2 (get_total_vs_observed + get_probs_matrix): long probs table
     + dense .npy matrix."""
     if tables:
-        located, homes = tables["located"], tables["homes"]
+        interactions, homes = tables["interactions"], tables["homes"]
     else:
-        homes = _read_or(spark, _out(args, "homes.parquet"), lambda: None, "homes")
-        located = _read_or(spark, _out(args, "located.parquet"), lambda: None, "located")
-        if homes is None or located is None:
-            sys.exit("prob-matrix needs gen-tables outputs (run --gen-tables first)")
-    # contact_prob_table attaches homes itself (via observed_contacts); a
-    # pre-join here would be a pure wasted shuffle of the located facts.
-    probs = contact_prob_table(
-        located,
-        homes.select("caid", "home_ageb"),
-        bucket_seconds=args.bucket_seconds,
+        homes = _read_ir(spark, args, "homes")
+        interactions = _read_ir(spark, args, "interactions")
+    # The interactions IR is the co-location join's output in (least,
+    # greatest) form; both directions of it are exactly the distinct
+    # ordered pairs, so the self-join over located never runs twice.
+    pairs = interactions.select("a_caid", "b_caid").unionByName(
+        interactions.select(
+            F.col("b_caid").alias("a_caid"), F.col("a_caid").alias("b_caid")
+        )
     )
-    probs.write.mode("overwrite").parquet(_out(args, "contact_probs.parquet"))
+    # contact_prob_table attaches homes itself (via observed_contacts); a
+    # pre-join here would be a pure wasted shuffle.
+    probs = contact_prob_table(None, homes.select("caid", "home_ageb"), pairs=pairs)
+    probs = _write_ir(spark, probs, _out(args, "contact_probs.parquet"))
     labels, matrix = probs_to_matrix(probs, "a_home_ageb", "b_home_ageb")
     write_matrix_npy(_out(args, "probs_matrix.npy"), matrix)
     with open(_out(args, "probs_labels.json"), "w") as f:
@@ -288,6 +309,7 @@ def seir_sweep(spark, args, nodes: DataFrame | None, edges: DataFrame | None):
     trajectory_stats(traj).toPandas().to_csv(
         _out(args, "seir_stats.csv"), index=False
     )
+    traj.unpersist()
     write_pickle(
         _out(args, "seir_results.pickle"),
         {"n_nodes": n_nodes, "n_edges": n_edges, "seeds": args.seeds},
@@ -307,8 +329,11 @@ def rg_stage(spark, args, tables: dict | None) -> None:
     else:
         located = spark.read.parquet(_out(args, "located.parquet"))
         homes = spark.read.parquet(_out(args, "homes.parquet"))
-    rgs = device_rg(located, id_col="caid", cell_col="h3index_15")
-    rgs.write.mode("overwrite").parquet(_out(args, "device_rg.parquet"))
+    rgs = _write_ir(
+        spark,
+        device_rg(located, id_col="caid", cell_col="h3index_15"),
+        _out(args, "device_rg.parquet"),
+    )
     # Devices whose home stayed the 13-char sentinel (unlocatable /
     # imputation miss) must not roll up into a phantom "00000" municipality
     # — the reference rollup keys on real cve_mun membership.
@@ -393,10 +418,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--corpus-shards", type=int, default=8)
     p.add_argument("--min-accuracy", type=float, default=100.0)
     p.add_argument("--quality-gate", action="store_true",
-                   help="enforce stage invariants (operators/quality) "
-                        "before writing gen-tables IR")
+                   help="enforce stage invariants (operators/quality) on "
+                        "the gen-tables IR as read back; a failure deletes "
+                        "that IR before raising")
     p.add_argument("--bucket-seconds", type=int, default=600)
-    p.add_argument("--impute-rounds", type=int, default=6)
+    p.add_argument("--impute-rounds", type=int, default=6,
+                   help="neighbour-frequency imputation; 0 disables it, and "
+                        "one round already reaches the fixpoint (any "
+                        "positive value gives the same homes)")
     p.add_argument("--scale", type=int, default=1000, help="network node count")
     p.add_argument(
         "--graphml-max-edges", type=int, default=5_000_000,

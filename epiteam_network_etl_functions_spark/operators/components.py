@@ -7,14 +7,13 @@ propagation (each node adopts the smallest id reachable in one hop;
 converges in O(diameter) rounds; the large-star/small-star optimization is
 the known upgrade for pathological diameters).
 
-Each round is one join + one aggregation on the edge list — no driver-side
-graph. Convergence is checked with a cheap changed-count aggregate; state
-is cached and the previous round unpersisted.
+Each round works on the edge list alone — no driver-side graph. State is
+localCheckpointed every round and the previous round unpersisted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def undirected_adjacency(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -111,8 +110,8 @@ def connected_components_star(
     O(diameter) (``connected_components``): a 10⁵-node path graph converges
     in ~17 rounds here where min-label needs 10⁵.
 
-    Each round is two map-side star operations, each one groupBy over the
-    current edge set:
+    Each round is two star operations, each one window minimum over the
+    current edge set partitioned by ``u``:
 
     - large-star: for every node u, point every *larger* neighbour at
       m = min(Γ(u) ∪ {u}).
@@ -122,7 +121,8 @@ def connected_components_star(
     Convergence: the edge set is a fixpoint (star forests centred on each
     component's min id). Checked with an order-independent fingerprint
     (count + bit_xor of xxhash64(u, v) — xor, not sum, so ANSI-mode
-    overflow is impossible) in one aggregate per round. State is
+    overflow is impossible), observed during the round's own
+    localCheckpoint action, so it costs no job of its own. State is
     localCheckpointed per round so plans stay O(1) across iterations.
 
     Replaces the driver-side networkx components the reference consumes for
@@ -136,59 +136,43 @@ def connected_components_star(
         if t not in comparable:
             raise ValueError(f"node id column {f.name} has unordered type {t}")
 
-    e = (
+    def checkpoint(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+        obs = Observation()
+        out = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        ).localCheckpoint()
+        return out, (int(obs.get["n"]), int(obs.get["h"]))
+
+    e, prev = checkpoint(
         edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .where(F.col("u") != F.col("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
-    all_nodes = (
-        e.select(F.col("u").alias("node_id"))
-        .unionByName(e.select(F.col("v").alias("node_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev = fingerprint(e)
+    by_u = Window.partitionBy("u")
     converged = False
     for _ in range(max_iterations):
-        # large-star over the symmetric neighbourhood
+        # large-star over the symmetric neighbourhood; v > u >= m, so every
+        # edge it emits already points downward. Its duplicates are left
+        # for small-star's distinct.
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
         large = (
-            sym.join(mins, "u")
+            sym.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
         )
-        # small-star over downward-oriented edges
-        down = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smins = down.groupBy("u").agg(F.min("v").alias("m"))
-        joined = down.join(smins, "u")
-        small = (
-            joined.where(F.col("v") != F.col("m"))
+        # small-star: each emitted row yields (v -> m) and (u -> m)
+        star = large.withColumn("m", F.min("v").over(by_u))
+        small, cur = checkpoint(
+            star.where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
+            .unionByName(star.select("u", F.col("m").alias("v")))
             .distinct()
-            .localCheckpoint()
         )
         e.unpersist()
         e = small
-        cur = fingerprint(e)
         if cur == prev:
             converged = True
             break
@@ -198,22 +182,13 @@ def connected_components_star(
             f"connected_components_star did not converge in {max_iterations} "
             "rounds — pathological input (expected O(log n) rounds)"
         )
-    # Fixpoint edges are (member -> component min). Min nodes label themselves.
-    labels = (
-        all_nodes.join(
-            e.select(F.col("u").alias("node_id"), F.col("v").alias("__comp")),
-            "node_id",
-            "left",
-        )
-        .select(
-            "node_id",
-            F.coalesce(F.col("__comp"), F.col("node_id")).alias("component_id"),
-        )
+    # Fixpoint edges are (member -> component min); the mins label
+    # themselves. ``e`` stays checkpointed: the labels read it.
+    return e.select(
+        F.col("u").alias("node_id"), F.col("v").alias("component_id")
+    ).unionByName(
+        e.select(F.col("v").alias("node_id"), F.col("v").alias("component_id")).distinct()
     )
-    out = labels.localCheckpoint()
-    e.unpersist()
-    all_nodes.unpersist()
-    return out
 
 
 def components_as_arrays(

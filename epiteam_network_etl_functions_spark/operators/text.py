@@ -36,7 +36,7 @@ def shingles_col(toks: Column, k: int = 3, sep: str = "_") -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _fan_out_few_splits(df: DataFrame, id_col: str) -> DataFrame:
+def _fan_out_few_splits(df: DataFrame) -> DataFrame:
     """Fan a few-split corpus out across the cluster before a ~10x
     tokenize/explode expansion; a no-op at production split counts.
 
@@ -97,11 +97,11 @@ def explode_shingles(
     few-split corpus across the cluster; without it the explode runs on
     as many tasks as the input has splits. When splits are far below the
     session's parallelism, repartition the NARROW document rows first
-    (hashed on ``id_col`` — see _fan_out_few_splits) — that shuffle moves
+    (round-robin — see _fan_out_few_splits) — that shuffle moves
     the corpus text once (k-times fewer bytes than the exploded shingle
     stream the old distinct moved) and is a no-op at production split
     counts (same guard as tfidf_top_terms)."""
-    df = _fan_out_few_splits(df, id_col)
+    df = _fan_out_few_splits(df)
     shingles = shingles_col(F.col("__t"), k)
     out = (
         df.withColumn("__t", tokens_col(text_col))
@@ -295,7 +295,7 @@ def tfidf_top_terms(
     # exchange (r14 plan: Exchange -> HashAggregate under the broadcast
     # build) for a row count the scan can answer directly.
     n_docs_src = df
-    df = _fan_out_few_splits(df, id_col)
+    df = _fan_out_few_splits(df)
     # Row-local run-length encoding of the sorted token array: emits one
     # (term, tf) struct per distinct term of the document without any
     # exchange (the map-side combine an explode+groupBy would only reach

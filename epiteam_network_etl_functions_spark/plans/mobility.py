@@ -12,7 +12,7 @@ double (+ h3 cell columns added here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..constants import NIGHT_END_HOUR, NIGHT_START_HOUR, SENTINEL_AGEB_13
 from ..functions.hexgrid import cell_of, k_ring
@@ -309,47 +309,38 @@ def _impute_by_member(
     sentinel: str,
     rounds: int,
 ) -> DataFrame:
-    cur = homes
-    prev_cached = None
-    for _ in range(rounds):
-        cur = cur.cache()
-        missing = cur.where(F.col(home_col) == sentinel)
-        empty = missing.isEmpty()
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = cur
-        if empty:
-            break
-        with_comp = cur.join(member, id_col, "left")
-        freq = (
-            with_comp.where(F.col(home_col) != sentinel)
-            .groupBy("__comp_id", home_col)
-            .agg(F.count(F.lit(1)).alias("n"))
+    """One pass is the fixpoint of the reference's repeated rounds: the
+    first round fills every sentinel device whose component holds a
+    non-sentinel member, and the components left over hold only sentinel
+    members, so no later round can fill anything (components are disjoint,
+    as connected components are). ``rounds <= 0`` disables imputation.
+
+    Both windows run on one exchange: hash partitioning on the component
+    satisfies the (component, home) window too."""
+    if rounds <= 0:
+        return homes
+    n = F.count(F.lit(1)).over(Window.partitionBy("__comp_id", home_col))
+    # the (n DESC, home ASC) winner among the component's non-sentinel rows
+    best = F.min(
+        F.when(F.col(home_col) != sentinel, F.struct((-n).alias("n"), F.col(home_col)))
+    ).over(Window.partitionBy("__comp_id"))
+    fill = (
+        homes.join(member, id_col)
+        .repartition("__comp_id")
+        .select(id_col, home_col, best[home_col].alias("__fill"))
+        .where((F.col(home_col) == sentinel) & F.col("__fill").isNotNull())
+        # a device listed in several member arrays takes the smallest fill
+        .groupBy(id_col)
+        .agg(F.min("__fill").alias("__fill"))
+    )
+    return (
+        homes.join(fill, id_col, "left")
+        .withColumn(
+            home_col,
+            F.when(
+                (F.col(home_col) == sentinel) & F.col("__fill").isNotNull(),
+                F.col("__fill"),
+            ).otherwise(F.col(home_col)),
         )
-        best = top1_per_key(freq, ["__comp_id"], [F.desc("n"), F.asc(home_col)])
-        fill = (
-            missing.select(id_col)
-            .join(member, id_col)
-            .join(best.select("__comp_id", F.col(home_col).alias("__fill")), "__comp_id")
-            .select(id_col, "__fill")
-        )
-        fill = top1_per_key(fill, [id_col], [F.asc("__fill")]).cache()
-        # Fixpoint check on FILL, not just missing: devices in all-sentinel
-        # components stay missing forever, and without this exit the loop
-        # would run every remaining round as a no-op — each one nesting the
-        # previous plan ~3x (cur feeds cur, freq and missing), which blows
-        # the analyzer's heap long before the data is large.
-        if fill.isEmpty():
-            break
-        cur = (
-            cur.join(fill, id_col, "left")
-            .withColumn(
-                home_col,
-                F.when(
-                    (F.col(home_col) == sentinel) & F.col("__fill").isNotNull(),
-                    F.col("__fill"),
-                ).otherwise(F.col(home_col)),
-            )
-            .drop("__fill")
-        )
-    return cur
+        .drop("__fill")
+    )

@@ -347,9 +347,9 @@ def dedup_keepers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components_star
 
     pairs, cached = _near_dup_pipeline(spark, sf_dir)
-    # labels are localCheckpointed by the component kernel; the shared
-    # choreography releases the upstream caches, which would otherwise
-    # leak one copy per invocation
+    # the component kernel localCheckpoints its edge state, so its labels
+    # no longer read the upstream caches; the shared choreography releases
+    # them, which would otherwise leak one copy per invocation
     labels = _materialize_release(
         connected_components_star(pairs, a_col="a_id", b_col="b_id"), *cached
     )

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from epiteam_network_etl_functions_spark import cli
 from conftest import PARITY_SF_DIR
 
@@ -34,19 +36,47 @@ def _args(out: str, extra: list[str] | None = None):
     )
 
 
-def test_cli_stages_end_to_end(spark, tmp_path):
-    out = str(tmp_path / "run")
-    os.makedirs(out)
-    args = _args(out)
+# gen_tables on the demo ran 39-40 jobs when this budget was set (151
+# when every consumer re-ran the lazy lineage); about 1.5x the measured
+# count, so a reintroduced recompute fails here as a count, not as noise.
+GEN_TABLES_JOB_BUDGET = 60
 
-    tables = cli.gen_tables(spark, args)
+
+@pytest.fixture(scope="module")
+def chain(spark, tmp_path_factory):
+    """One in-process chain on the demo inputs (tables and probs handed
+    forward), with the job count of its gen_tables stage."""
+    out = str(tmp_path_factory.mktemp("chain"))
+    args = _args(out)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-cli-gen-tables", "gen_tables job budget")
+    try:
+        tables = cli.gen_tables(spark, args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("test-cli-gen-tables"))
+    probs = cli.prob_matrix(spark, args, tables)
+    nodes, edges = cli.build_network(spark, args, tables, probs)
+    return {"args": args, "tables": tables, "probs": probs, "nodes": nodes,
+            "edges": edges, "gen_tables_jobs": jobs}
+
+
+def _rows(path: str) -> list[tuple]:
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path)
+    return sorted(zip(*(table.column(c).to_pylist() for c in sorted(table.column_names))))
+
+
+def test_cli_stages_end_to_end(spark, chain):
+    args, tables, probs = chain["args"], chain["tables"], chain["probs"]
+    out = args.out
     homes = tables["homes"]
     assert set(homes.columns) >= {"caid", "home_ageb"}
     assert homes.count() > 0
     for name in ("homes.parquet", "interactions.parquet", "located.parquet"):
         assert os.path.exists(os.path.join(out, name))
 
-    probs = cli.prob_matrix(spark, args, tables)
     assert set(probs.columns) == {
         "a_home_ageb", "b_home_ageb", "total_pairs", "observed", "prob"
     }
@@ -54,7 +84,7 @@ def test_cli_stages_end_to_end(spark, tmp_path):
     assert len(labels) > 0
     assert os.path.exists(os.path.join(out, "probs_matrix.npy"))
 
-    nodes, edges = cli.build_network(spark, args, tables, probs)
+    nodes, edges = chain["nodes"], chain["edges"]
     assert nodes.count() == 120  # scale honored exactly (sizes sum assert)
     assert os.path.exists(os.path.join(out, "network.graphml"))
 
@@ -67,21 +97,19 @@ def test_cli_stages_end_to_end(spark, tmp_path):
     assert os.path.exists(os.path.join(out, "seir_results.pickle"))
 
 
-def test_cli_graphml_cap_skips_sink(spark, tmp_path):
+def test_cli_graphml_cap_skips_sink(spark, chain, tmp_path):
     """--graphml-max-edges 0 skips the driver-streamed XML sink but still
     writes the parquet IR (the scale artifact)."""
     out = str(tmp_path / "run_cap")
     os.makedirs(out)
     args = _args(out, ["--graphml-max-edges", "0"])
-    tables = cli.gen_tables(spark, args)
-    probs = cli.prob_matrix(spark, args, tables)
-    nodes, edges = cli.build_network(spark, args, tables, probs)
+    nodes, edges = cli.build_network(spark, args, chain["tables"], chain["probs"])
     assert not os.path.exists(os.path.join(out, "network.graphml"))
     assert os.path.exists(os.path.join(out, "network_edges.parquet"))
     assert nodes.count() == 120
 
 
-def test_cli_seir_distributed_switch(spark, tmp_path):
+def test_cli_seir_distributed_switch(spark, chain, tmp_path):
     """Forcing --seir-max-collect-edges below the demo network's edge
     count routes the sweep through the distributed discrete-time kernel;
     output artifacts keep the same shape (seed column, per-t stats)."""
@@ -90,9 +118,7 @@ def test_cli_seir_distributed_switch(spark, tmp_path):
     out = str(tmp_path / "run_dist")
     os.makedirs(out)
     args = _args(out, ["--seir-max-collect-edges", "1"])
-    tables = cli.gen_tables(spark, args)
-    probs = cli.prob_matrix(spark, args, tables)
-    nodes, edges = cli.build_network(spark, args, tables, probs)
+    nodes, edges = cli.build_network(spark, args, chain["tables"], chain["probs"])
     cli.seir_sweep(spark, args, nodes, edges)
     with open(os.path.join(out, "seir_trajectories.csv")) as f:
         rows = list(csv.DictReader(f))
@@ -105,18 +131,66 @@ def test_cli_seir_distributed_switch(spark, tmp_path):
         assert f.readline().strip() == "t,avg_I,std_I,n_runs"
 
 
-def test_cli_stage_restart_reads_prior_ir(spark, tmp_path):
-    """A later stage in a fresh invocation reuses the parquet IR."""
+def test_cli_stage_restart_reads_prior_ir(spark, chain, tmp_path):
+    """A later stage in a fresh invocation reuses the parquet IR, and the
+    restart writes exactly what the in-process chain (tables and probs
+    handed forward) writes."""
     out = str(tmp_path / "run2")
     os.makedirs(out)
     args = _args(out)
     cli.gen_tables(spark, args)
-    # no in-memory tables passed: must read homes/located from disk
+    # no in-memory tables passed: must read homes/interactions from disk
     probs = cli.prob_matrix(spark, args, None)
     assert probs.count() > 0
+    cli.build_network(spark, args, None, None)
+    for name in ("homes", "interactions", "contact_probs", "network_edges"):
+        want = _rows(os.path.join(chain["args"].out, f"{name}.parquet"))
+        assert _rows(os.path.join(out, f"{name}.parquet")) == want, name
+        assert want, name
     cli.rg_stage(spark, args, None)
     with open(os.path.join(out, "rg_by_mun.csv")) as f:
         assert f.readline().strip() == "cve_mun,avg_rg,std_rg,n_devices"
+
+
+def test_gen_tables_job_budget(chain):
+    """Every gen_tables intermediate is computed once: the stage's job
+    count stays within a budget measured on the same demo inputs."""
+    assert 0 < chain["gen_tables_jobs"] <= GEN_TABLES_JOB_BUDGET, chain["gen_tables_jobs"]
+
+
+def test_cli_quality_gate_failure_leaves_no_ir(spark, tmp_path):
+    """--quality-gate checks the gen-tables IR as read back; a failure
+    raises and deletes that IR, so no restart can reuse it."""
+    import datetime as dt
+
+    from epiteam_network_etl_functions_spark.plans.mobility import with_cells
+
+    rows = [
+        (caid, dt.datetime(2024, 3, 2, 23, minute), 19.4 + 1e-5 * i, -99.15, 150.0)
+        for i, caid in enumerate(("a", "b"))
+        for minute in (0, 20, 40)
+    ]
+    pings = spark.createDataFrame(
+        rows,
+        "caid string, cdmx_datetime timestamp, latitude double, "
+        "longitude double, horizontal_accuracy double",
+    )
+    pings_path, dim_path = str(tmp_path / "pings"), str(tmp_path / "dim")
+    pings.write.parquet(pings_path)
+    # every realized cell maps to a code that is not 13 digits
+    with_cells(pings, out_col="cell").selectExpr(
+        "cell", "'BAD-GEO' AS cve_geo"
+    ).distinct().write.parquet(dim_path)
+    out = str(tmp_path / "gated")
+    os.makedirs(out)
+    args = cli.build_parser().parse_args(
+        ["all", "--pings", pings_path, "--dim", dim_path, "--out", out,
+         "--quality-gate"]
+    )
+    with pytest.raises(ValueError, match="home_ageb"):
+        cli.gen_tables(spark, args)
+    for name in ("homes", "interactions", "located"):
+        assert not os.path.exists(os.path.join(out, f"{name}.parquet")), name
 
 
 def test_cli_corpus_stage(spark, tmp_path):

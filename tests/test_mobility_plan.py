@@ -7,6 +7,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row, functions as F
 
 from epiteam_network_etl_functions_spark.constants import SENTINEL_AGEB_13
@@ -149,7 +151,7 @@ def test_neighbour_frequency_impute(spark):
 def test_neighbour_frequency_labels_matches_arrays(spark):
     """The long-label entry point (no component-fits-in-a-row ceiling)
     fills identically to the reference-shaped arrays form — including
-    multi-round propagation through a chained component structure."""
+    components the star kernel closes over a chain of edges."""
     from epiteam_network_etl_functions_spark.operators.components import (
         components_as_arrays,
         connected_components_star,
@@ -190,6 +192,101 @@ def test_neighbour_frequency_labels_matches_arrays(spark):
     assert via_labels["D"] == "0901200010010"
     assert via_labels["G"] == "1501200010020"
     assert via_labels["E"] == SENTINEL_AGEB_13
+
+
+_CODES = ("0901200010010", "0901200010020", "1501200010020")
+
+
+def _multi_round_model(homes, comp_of, rounds):
+    """The reference's repeated imputation rounds in plain Python: each
+    round fills every sentinel device of a component holding a
+    non-sentinel home with that component's (count DESC, home ASC) winner
+    over the current homes, until a round fills nothing."""
+    from collections import Counter, defaultdict
+
+    cur = dict(homes)
+    for _ in range(rounds):
+        counts = defaultdict(Counter)
+        for dev, home in cur.items():
+            if home != SENTINEL_AGEB_13 and dev in comp_of:
+                counts[comp_of[dev]][home] += 1
+        best = {
+            c: min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            for c, cnt in counts.items()
+        }
+        fill = {
+            dev: best[comp_of[dev]]
+            for dev, home in cur.items()
+            if home == SENTINEL_AGEB_13 and comp_of.get(dev) in best
+        }
+        if not fill:
+            break
+        cur.update(fill)
+    return cur
+
+
+@st.composite
+def _population(draw, tag):
+    """(homes, labels): components that are mixed, sentinel-heavy or
+    all-sentinel, members without a homes row, and isolated devices."""
+    homes, labels = {}, {}
+    home = st.sampled_from((SENTINEL_AGEB_13,) * 3 + _CODES)
+    for c in range(draw(st.integers(0, 6))):
+        all_sentinel = draw(st.booleans())
+        for _ in range(draw(st.integers(1, 6))):
+            dev = f"{tag}d{len(labels) + len(homes)}"
+            labels[dev] = f"{tag}c{c}"
+            if draw(st.integers(0, 5)) > 0:  # else: labelled, no homes row
+                homes[dev] = SENTINEL_AGEB_13 if all_sentinel else draw(home)
+    for _ in range(draw(st.integers(0, 3))):  # isolated: no component
+        homes[f"{tag}d{len(labels) + len(homes)}"] = draw(home)
+    return homes, labels
+
+
+@st.composite
+def _populations(draw):
+    """Several populations with disjoint ids, imputed in one Spark run."""
+    homes, labels = {}, {}
+    for i in range(draw(st.integers(1, 8))):
+        h, lab = draw(_population(f"p{i}"))
+        homes.update(h)
+        labels.update(lab)
+    return homes, labels
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(pop=_populations(), rounds=st.integers(0, 4))
+def test_one_pass_imputation_matches_multi_round_model(spark, pop, rounds):
+    """Equality lock for the one-pass imputation: both entry points give
+    what the old multi-round loop gives, for every round count (0
+    disables imputation)."""
+    from epiteam_network_etl_functions_spark.operators.components import (
+        components_as_arrays,
+    )
+    from epiteam_network_etl_functions_spark.plans.mobility import (
+        impute_neighbour_frequency_labels,
+    )
+
+    homes, labels = pop
+    homes_df = spark.createDataFrame(
+        sorted(homes.items()), "caid string, home_ageb string"
+    )
+    labels_df = spark.createDataFrame(
+        sorted(labels.items()), "node_id string, component_id string"
+    )
+    want = _multi_round_model(homes, labels, rounds)
+    via_labels = impute_neighbour_frequency_labels(homes_df, labels_df, rounds=rounds)
+    via_arrays = impute_neighbour_frequency(
+        homes_df, components_as_arrays(labels_df), rounds=rounds
+    )
+    for out in (via_labels, via_arrays):
+        rows = out.collect()
+        assert len(rows) == len(homes)
+        assert {r["caid"]: r["home_ageb"] for r in rows} == want
 
 
 def test_locate_pings_broadcast_join(spark):
