@@ -42,7 +42,6 @@ from .operators.components import connected_components_star
 from .operators.contacts import group_sizes
 from .operators.graphs import (
     sample_nodes,
-    sample_nodes_distributed,
     sbm_edges,
     sbm_edges_binomial,
     scale_sizes,
@@ -206,21 +205,18 @@ def build_network(spark, args, tables: dict | None, probs: DataFrame | None):
     prob_table = probs.selectExpr(
         "a_home_ageb AS a_block", "b_home_ageb AS b_block", "prob"
     )
+    nodes = sample_nodes(scaled, spark)
     if sum(scaled.values()) > 50_000:
-        # beyond the n² candidate-join regime: distributed node table +
-        # binomial per-chunk counts — identical layout and edge
-        # distribution, output-sized work, O(n_blocks) driver state
-        nodes = sample_nodes_distributed(scaled, spark)
+        # beyond the n² candidate-join regime: binomial per-chunk counts —
+        # identical layout and edge distribution, output-sized work,
+        # O(n_blocks) driver state
         edges = sbm_edges_binomial(scaled, prob_table, spark, seed=args.seed)
     else:
-        nodes = sample_nodes(scaled, spark)
         edges = sbm_edges(nodes, prob_table, seed=args.seed)
-    edges.write.mode("overwrite").parquet(_out(args, "network_edges.parquet"))
-    nodes.write.mode("overwrite").parquet(_out(args, "network_nodes.parquet"))
     # Downstream consumers read the materialized IR back — the SBM cross
     # join must run once, not once per consumer (side_results semantics).
-    edges = spark.read.parquet(_out(args, "network_edges.parquet"))
-    nodes = spark.read.parquet(_out(args, "network_nodes.parquet"))
+    edges = _write_ir(spark, edges, _out(args, "network_edges.parquet"))
+    nodes = _write_ir(spark, nodes, _out(args, "network_nodes.parquet"))
     n_edges = edges.count()
     if n_edges <= args.graphml_max_edges:
         stats = write_graphml(
@@ -289,10 +285,12 @@ def seir_sweep(spark, args, nodes: DataFrame | None, edges: DataFrame | None):
               f"> --seir-max-collect-edges={args.seir_max_collect_edges})",
               file=sys.stderr)
     else:
-        edge_list = [
+        # sorted: the per-edge Gillespie weights are drawn by list
+        # position, so the trajectories must not depend on file row order
+        edge_list = sorted(
             (r["a_node"], r["b_node"])
             for r in edges.select("a_node", "b_node").collect()
-        ]
+        )
         traj = run_gillespie_sweep(
             spark,
             n_nodes,

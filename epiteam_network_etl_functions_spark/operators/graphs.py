@@ -57,22 +57,39 @@ def scale_sizes(sizes: dict[str, int], target_n: int) -> dict[str, int]:
 def sample_nodes(scaled: dict[str, int], spark) -> DataFrame:
     """Node table (node_id, block) realizing the scaled sizes — the
     np.random.choice weighted draw (NetworkBuilder.py:374-381) made
-    deterministic: blocks in sorted order, contiguous id ranges.
+    deterministic: blocks in sorted order, contiguous id ranges
+    (:func:`block_ranges`). spark.range(total) joined to the broadcast
+    block-boundary literal on containment: O(n_blocks) driver work, no
+    Python worker.
 
     Partition count is sized to the node count, not the session default:
     the table feeds an n² cross join whose partitioning is the *product*
     of both sides' (32 slices of a 200-row table → 1024 near-empty
     cartesian tasks). ~2k nodes per slice keeps the product sane at every
     scale."""
-    rows = []
-    nid = 0
-    for b in sorted(scaled):
-        for _ in range(scaled[b]):
-            rows.append((nid, b))
-            nid += 1
-    slices = max(1, min(32, len(rows) // 2000))
-    rdd = spark.sparkContext.parallelize(rows, slices)
-    return spark.createDataFrame(rdd, ["node_id", "block"])
+    total = sum(scaled.values())
+    bounds = F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("block"),
+                    F.lit(lo).cast("long").alias("__lo"),
+                    F.lit(lo + n).cast("long").alias("__hi"),
+                )
+                for b, (lo, n) in block_ranges(scaled).items()
+            ]
+        )
+    )
+    slices = max(1, min(32, total // 2000))
+    return (
+        spark.range(0, total, 1, slices)
+        .withColumnRenamed("id", "node_id")
+        .join(
+            F.broadcast(spark.range(1).select(bounds)),
+            (F.col("node_id") >= F.col("__lo")) & (F.col("node_id") < F.col("__hi")),
+        )
+        .select("node_id", "block")
+    )
 
 
 def sbm_edges(
@@ -106,29 +123,6 @@ def sbm_edges(
     u = hash_bucket(pair_id, 1_000_000, salt=f"sbm:{seed}") / F.lit(1_000_000.0)
     return with_p.where(u < F.col("prob")).select(
         "a_node", "b_node", "a_block", "b_block"
-    )
-
-
-def sample_nodes_distributed(scaled: dict[str, int], spark) -> DataFrame:
-    """The same contiguous sorted-block node table as ``sample_nodes``,
-    generated WITHOUT the driver-side Python list: spark.range(total)
-    joined to the broadcast block-boundary table on containment. At
-    10⁷+ nodes the list-based builder spends minutes of single-threaded
-    driver time and GBs of heap; this is O(n_blocks) driver work."""
-    ranges = block_ranges(scaled)
-    total = sum(scaled.values())
-    bounds = spark.createDataFrame(
-        [(b, lo, lo + n) for b, (lo, n) in ranges.items()],
-        "block string, __lo long, __hi long",
-    )
-    return (
-        spark.range(total)
-        .withColumnRenamed("id", "node_id")
-        .join(
-            F.broadcast(bounds),
-            (F.col("node_id") >= F.col("__lo")) & (F.col("node_id") < F.col("__hi")),
-        )
-        .select("node_id", "block")
     )
 
 
@@ -266,7 +260,7 @@ def sbm_edges_binomial(
         )
 
     # Chunk descriptors via a global spark.range over cumulative chunk
-    # offsets (the sample_nodes_distributed pattern) — NOT explode(
+    # offsets (the sample_nodes pattern) — NOT explode(
     # sequence(...)): a single 10⁷-node block is ~12.5M chunks, and a
     # sequence() array of that length is one ~100 MB row (OOM / sequence
     # cap) while a range join is O(1) memory per row.

@@ -95,13 +95,6 @@ def _profile_conf() -> dict:
     conf = dict(_CORRECTNESS_CONF)
     if os.environ.get("SPARK_GRAFT_SMALL_PROFILE") == "1":
         conf.update(_SMALL_CONF)
-        # Experiment hook: broadcast-threshold override in MB (self-join
-        # sides stay shuffle-hash regardless — the join hints pin them).
-        bcast_mb = os.environ.get("SPARK_GRAFT_BCAST_MB")
-        if bcast_mb:
-            conf["spark.sql.autoBroadcastJoinThreshold"] = str(
-                int(bcast_mb) * 1024 * 1024
-            )
     else:
         conf.update(_SCALE_CONF)
     return conf

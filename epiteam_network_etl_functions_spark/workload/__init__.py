@@ -37,553 +37,13 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The external driver snapshots a 50-query prefix of the registry and a
-# green row in ANY round certifies a query permanently (rounds 1-4 emitted
-# the first 50 registered names each round). Round-5 rotation: DEMOTED is
-# exactly the set of queries already driver-certified green in some round
-# (union of CORRECTNESS_r01-r04 hash_match:true) plus the two no-oracle
-# rows-only queries (`bucket_counts_approx`, `pca_explained_variance`) whose
-# driver row can only ever be `err:no_oracle` and must not burn a prefix
-# slot. Everything NOT listed here — the 39 never-certified oracle-backed
-# round-4 queries plus any query newly registered this round — lands inside
-# the certified prefix. Every demoted query keeps its oracle and stays in
-# the local parity gate (tests/test_parity.py, tools/parity_sf001.py).
-DEMOTED: tuple[str, ...] = (
-    # -- driver-green round 4 --
-    "extract_day_slice",
-    "night_window_counts",
-    "home_winners",
-    "above_avg_devices",
-    "bucket_counts",
-    "colocation_pairs",
-    "block_sizes",
-    "total_vs_observed",
-    "contact_probs",
-    "radius_of_gyration",
-    "anti_join_quiet_users",
-    "union_two_days",
-    "pricing_summary",
-    "top_unshipped_orders",
-    "region_nation_revenue",
-    "scalar_function_suite",
-    "supplier_balance_rollup",
-    "doc_token_stats",
-    "doc_quality",
-    "exact_dedup_groups",
-    "minhash_signatures",
-    "lsh_candidates",
-    "near_dup_pairs",
-    "dedup_keepers",
-    "label_centroids",
-    "knn_bruteforce",
-    "ivf_probe_knn",
-    "multimodal_features",
-    "simhash_signatures",
-    "embedding_near_dups",
-    "dataset_splits",
-    "asof_last_signup",
-    "user_sessions",
-    "value_quantiles",
-    "running_value_totals",
-    "interval_join_events",
-    "pings_fact_base",
-    "pings_daily_homes",
-    "pings_global_home",
-    "pings_impute_kring",
-    "pings_impute_neighbours",
-    "pings_device_rg",
-    "pings_interactions",
-    "pings_impute_kring_hex",
-    "upsert_latest",
-    "scd2_apply",
-    # -- driver-green rounds 1-3 --
-    "colocation_edges",
-    "dedup_joinback_labels",
-    "sql_api_colocation",
-    "simhash_buckets",
-    "split_balance",
-    "ivf_assignments",
-    "embedding_norms",
-    "doc_topic_scores",
-    "doc_fingerprints",
-    "returns_rollup",
-    "late_shipment_orders",
-    "priority_order_counts",
-    "customer_order_distribution",
-    "top_return_customers",
-    "except_day_users",
-    "type_pivot",
-    "user_event_share",
-    "semi_join_day_error_users",
-    "approx_device_stats",
-    "salted_hot_key_counts",
-    # -- driver-green round 5 (all 50 prefix slots certified; rotated out
-    # so the 7 round-5 tail additions + round-6 queries enter the prefix) --
-    "colocation_pairs_bucketed",
-    "device_degrees",
-    "colocation_triangles",
-    "colocation_clustering",
-    "top_events_per_user",
-    "event_cube_stats",
-    "colocation_kcore",
-    "type_counts_unpivot",
-    "colocation_pagerank",
-    "colocation_communities",
-    "volume_shipping",
-    "promo_revenue_share",
-    "small_quantity_revenue",
-    "discounted_brand_revenue",
-    "forecast_revenue",
-    "nation_market_share",
-    "top_revenue_supplier",
-    "large_volume_customers",
-    "sole_late_suppliers",
-    "idle_rich_customers",
-    "doc_language_id",
-    "tfidf_top_terms",
-    "exact_near_dup_pairs",
-    "doc_rolling_hash",
-    "rp_lsh_vec_buckets",
-    "embedding_gram",
-    "embedding_correlation",
-    "kmeans_centroids",
-    "kmeans_cluster_sizes",
-    "documents_profile",
-    "weighted_doc_sample",
-    "props_json_stats",
-    "props_bpe_tokens",
-    "inter_event_gaps",
-    "asof_next_error",
-    "asof_nearest_error",
-    "overlap_windows_events",
-    "events_quality_report",
-    "session_window_counts",
-    "hopping_window_counts",
-    "hourly_rollup_cascade",
-    "moving_value_avg",
-    "value_deciles_by_type",
-    "tiered_retention_events",
-    "value_forward_fill",
-    "value_outliers",
-    "value_histogram",
-    "user_missing_days",
-    "trailing_hour_stats",
-    "user_event_sequences",
-    # -- driver-green round 6 (CORRECTNESS_r06 50/50; cumulative
-    # certification now covers every oracle-backed query, so the whole
-    # r6 prefix rotates out and the r7 slots go to new queries) --
-    "min_cost_part_supplier",
-    "part_value_concentration",
-    "dominant_part_shippers",
-    "order_value_median",
-    "orders_monthly_trend",
-    "part_catalog_grouping_sets",
-    "doc_pack_bins",
-    "benchmark_contamination",
-    "chunk_dup_report",
-    "doc_repetition",
-    "doc_char_entropy",
-    "quality_quantile_keep",
-    "fuzzy_dedup_components",
-    "corpus_top_bigrams",
-    "doc_blocklist_hits",
-    "intersect_day_users",
-    "value_rank_profile",
-    "event_type_transitions",
-    "retention_cohorts",
-    "daily_new_users",
-    "value_minmax_scaled",
-    # -- driver-green round 7 (CORRECTNESS_r07 50/50; rotated out so the
-    # 59 held-out DEFERRED queries float into the round-8 prefix) --
-    "colocation_degree_distribution",
-    "colocation_pair_persistence",
-    "part_supplier_census",
-    "ship_latency_histogram",
-    "orders_backlog_depth",
-    "customer_repeat_rate",
-    "part_price_band_census",
-    "order_lines_distribution",
-    "supplier_load_balance",
-    "orders_weekday_profile",
-    "orders_quarter_growth",
-    "brand_type_revenue_rank",
-    "fulfillment_lag_by_priority",
-    "first_order_cohort_value",
-    "segment_value_matrix",
-    "supplier_nation_summary",
-    "region_revenue_share",
-    "corpus_funnel",
-    "contamination_by_source",
-    "lsh_ppjoin_consistency",
-    "doc_length_zscore",
-    "lang_source_matrix",
-    "doc_shingle_novelty",
-    "minhash_band_load",
-    "language_confusion_matrix",
-    "source_quality_profile",
-    "token_zipf_head",
-    "chunk_position_dup_rate",
-    "doc_quality_grid",
-    "near_dup_cluster_sizes",
-    "source_mix_weights",
-    "dedup_bytes_by_source",
-    "token_len_distribution",
-    "source_lang_diversity",
-    "shingle_df_histogram",
-    "doc_hapax_ratio",
-    "vec_sparsity_profile",
-    "vec_component_range",
-    "simhash_hamming_pairs",
-    "event_type_user_overlap",
-    "user_activity_gini",
-    "purchase_conversion_funnel",
-    "session_bounce_rate",
-    "value_quartile_labels",
-    "events_since_last_error",
-    "events_dow_hour_heatmap",
-    "device_day_coverage",
-    "night_owl_share",
-    "pings_home_stability",
-    "device_rg_percentiles",
-    # -- driver-green round 8 (CORRECTNESS_r08 50/50 on first-time names;
-    # rotated out so the 39 held-out DEFERRED queries float into the
-    # round-9 prefix with 11 slots free for early round-9 registrations) --
-    "colocation_assortativity",
-    "common_neighbor_links",
-    "adamic_adar_links",
-    "bridge_cells_report",
-    "device_mobility_entropy",
-    "meeting_count_histogram",
-    "nation_year_profit",
-    "returnflag_priority_counts",
-    "part_basket_pairs",
-    "part_size_price_regression",
-    "nation_trade_balance",
-    "customer_ltv_deciles",
-    "inventory_value_abc",
-    "supplier_herfindahl",
-    "customer_nation_pareto",
-    "order_value_vs_lines",
-    "cross_source_chunk_leakage",
-    "packing_fill_report",
-    "per_source_doc_sample",
-    "minhash_jaccard_calibration",
-    "shingle_containment_pairs",
-    "posting_list_heads",
-    "bigram_surprisal",
-    "quality_signal_correlation",
-    "corpus_growth_curve",
-    "tokenization_fertility_by_lang",
-    "doc_prefix_dup_groups",
-    "doc_numeric_density",
-    "corpus_token_budget_planner",
-    "source_vocab_overlap",
-    "centroid_pair_distances",
-    "semantic_bucket_dups",
-    "ivf_recall_audit",
-    "knn_label_agreement",
-    "vec_quantization_error",
-    "embedding_dim_variance",
-    "frame_sample_catalog",
-    "resized_payload_digest",
-    "markov_transition_probs",
-    "user_burstiness",
-    "value_autocorr_lag1",
-    "session_duration_histogram",
-    "dau_wau_stickiness",
-    "first_touch_attribution",
-    "hourly_anomaly_zscore",
-    "user_lifecycle_stages",
-    "error_burst_windows",
-    "value_winsorized_stats",
-    "value_first_digit_benford",
-    "purchase_interpurchase_gaps",
-    # -- driver-green round 9 (CORRECTNESS_r09 50/50; rotated out so the 27
-    # held-out DEFERRED round-9 registrations float into the round-10
-    # prefix with free slots for early round-10 registrations) --
-    "neighbor_jaccard_links",
-    "colocation_degree_gini",
-    "simhash_bit_balance",
-    "sbm_block_edge_census",
-    "seir_expected_infections",
-    "hot_cell_salt_plan",
-    "customer_rfm_segments",
-    "customer_er_blocking_pairs",
-    "supplier_part_jaccard",
-    "discount_lift_by_quantity",
-    "balance_spend_correlation",
-    "brand_share_yearly_shift",
-    "pmi_collocations",
-    "bm25_keyword_search",
-    "near_dup_cluster_source_mix",
-    "stopword_ratio_by_source",
-    "near_dup_threshold_sweep",
-    "source_heaps_law",
-    "lang_length_quantiles",
-    "ngram_coverage_curve",
-    "dedup_token_savings_by_source",
-    "mutual_knn_pairs",
-    "mutual_knn_bucketed",
-    "mutual_knn_recall_audit",
-    "rrf_hybrid_search",
-    "label_cosine_separation",
-    "knn_hubness_histogram",
-    "ivf_balance_report",
-    "payload_chunk_manifest",
-    "event_value_welch_test",
-    "wait_time_survival_curve",
-    "value_mad_by_type",
-    "value_ks_test_pairs",
-    "event_transition_entropy",
-    "value_cusum_range",
-    "value_skewness_by_type",
-    "signup_to_purchase_latency",
-    "peak_concurrency",
-    "peak_concurrency_partitioned",
-    "weekend_value_lift",
-    "device_od_matrix",
-    "cell_dwell_quantiles",
-    "commute_matrix",
-    "cell_occupancy_volatility",
-    "od_destination_entropy",
-    "mobility_contact_correlation",
-    "cell_daily_turnover",
-    "commute_asymmetry_index",
-    "scd2_version_histogram",
-    "stream_hourly_event_counts",
-    # -- rows-only by design (no SQL oracle exists); tail so a prefix slot
-    # is never spent on a guaranteed err:no_oracle row.
-    # (round-11: bucket_counts_approx PROMOTED out of this tail — it
-    # gained a bounded-error verdict oracle in r10 and its only driver
-    # row is the stale r04 err:no_oracle; it takes prefix slot 1 by
-    # registration order so a green row supersedes the ERR. The displaced
-    # 50th promoted name, jl_distortion_audit, floats to round 12.) --
-    "pca_explained_variance",
-    "two_hop_reach_sketch_audit",
-    "two_hop_reach_sketched",
-    # driver-green round 10 (CORRECTNESS_r10: 50/50 hash_match).
-    "balance_spend_spearman",
-    "priority_price_mannwhitney",
-    "mktsegment_nation_chi2",
-    "value_ewma_control",
-    "orders_seasonal_index",
-    "source_unigram_kl",
-    "markov_entropy_rate",
-    "brand_price_theil",
-    "two_hop_reach_histogram",
-    "stream_purchase_error_pairs",
-    "two_hop_reach_capped",
-    "doc_unigram_logprob",
-    "stream_dedup_event_counts",
-    "priority_price_kruskal_wallis",
-    "hourly_poisson_dispersion",
-    "stream_closed_sessions",
-    "jsonl_roundtrip_digest",
-    "hard_negative_pairs",
-    "part_basket_lift",
-    "hard_negative_bucketed",
-    "hard_negative_recall_audit",
-    "supplier_late_rate_wilson",
-    "event_type_lift_matrix",
-    "customer_value_trend_slopes",
-    "referential_integrity_audit",
-    "primary_key_audit",
-    "value_dow_hour_decomposition",
-    "order_price_rank_deciles",
-    "user_value_pareto",
-    "approx_distinct_users_verdict",
-    "median_sketch_verdict",
-    "order_status_priority_matrix",
-    "supplier_year_rank_change",
-    "shipping_sla_by_month",
-    "reorder_latency_by_segment",
-    "part_brand_price_iqr",
-    "rolling_7d_active_users",
-    "session_gap_sensitivity",
-    "concurrency_histogram",
-    "value_theil_by_type",
-    "gap_tail_hill",
-    "cell_transition_pmi",
-    "device_exploration_quantiles",
-    "cell_peak_hour",
-    "source_jsd_matrix",
-    "ttr_by_length_bucket",
-    "doc_positional_novelty",
-    "daily_count_changepoint",
-    "knn_margin_stats",
-    "ivf_probe_sweep",
-    # -- driver-green round 11 (tools/rotate.py) --
-    "bucket_counts_approx",
-    "value_psi_halves",
-    "order_priority_markov",
-    "customer_order_burstiness",
-    "supplier_part_gini",
-    "doc_simpson_diversity",
-    "embedding_dim0_anova",
-    "quantity_uniformity_chi2",
-    "home_work_separation",
-    "stream_sliding_hour_value",
-    "sim_measure_rank_corr",
-    "od_gravity_fit",
-    "cosine_l2_rank_agreement",
-    "heavy_hitters_verdict",
-    "theta_set_ops_verdict",
-    "kll_quantile_verdict",
-    "bitmap_distinct_users",
-    "count_min_freq_verdict",
-    "returned_share_by_brand",
-    "lineitem_tax_discount_grid",
-    "discount_cap_counterfactual",
-    "part_name_term_head",
-    "linenumber_position_profile",
-    "brand_peak_ship_month",
-    "domestic_revenue_share",
-    "international_order_share",
-    "nation_customer_supplier_balance",
-    "acctbal_outliers_by_nation",
-    "negative_balance_share",
-    "region_parttype_affinity",
-    "supplier_breadth_histogram",
-    "ship_lag_by_weekday",
-    "quantity_outlier_orders",
-    "unit_price_retail_gap",
-    "day_hour_profile_distance",
-    "user_type_entropy_histogram",
-    "daily_top_decile_share",
-    "error_rate_by_hour_wilson",
-    "week_over_week_user_jaccard",
-    "session_entry_exit_matrix",
-    "user_decile_migration",
-    "type_hourly_amplitude",
-    "activity_gap_profile",
-    "user_weekday_concentration",
-    "lang_char_trigram_head",
-    "term_position_profile",
-    "token_run_length_audit",
-    "nearest_centroid_confusion",
-    "cosine_to_mean_histogram",
-    "embedding_grid_occupancy",
-    # -- driver-green round 12 (tools/rotate.py) --
-    "jl_distortion_audit",
-    "morton_bucket_extent",
-    "zonemap_prune_audit",
-    "order_value_gini_by_segment",
-    "monthly_revenue_anomaly",
-    "customer_value_cv_histogram",
-    "order_total_coverage_ratio",
-    "return_rate_by_price_band",
-    "quarter_end_load_factor",
-    "second_event_latency_histogram",
-    "error_recovery_latency",
-    "modal_weekday_stability",
-    "vocab_head_turnover",
-    "cell_revisit_quantiles",
-    "join_key_skew_profile",
-    "hash_partition_balance_audit",
-    "compaction_bin_plan",
-    "props_variant_k_histogram",
-    "gap_exponential_ks",
-    "doc_length_lognormal_params",
-    "dict_encoding_gain_audit",
-    "sample_estimate_error_curve",
-    "stream_static_enrichment",
-    "nation_revenue_volatility",
-    "nation_top_brand",
-    "priority_mix_by_value_quintile",
-    "order_ship_weekday_matrix",
-    "parttype_size_chi2",
-    "monthly_revenue_autocorr",
-    "session_type_richness",
-    "value_by_session_position",
-    "zipf_abbreviation_curve",
-    "knn_radius_histogram",
-    "partial_merge_consistency",
-    "cents_fraction_bias",
-    "linenumber_density_audit",
-    "temporal_integrity_audit",
-    "stream_update_mode_counts",
-    "footer_stats_content_parity",
-    "footer_rowcount_audit",
-    "graphml_roundtrip_edges",
-    "geojson_dim_roundtrip",
-    "udtf_session_stats",
-    "udtf_top_bigrams",
-    "stream_append_closed_windows",
-    "stream_foreach_batch_totals",
-    "returnflag_linestatus_cramers_v",
-    "doc_sentence_length_profile",
-    "source_char_class_census",
-    "acctbal_ks_customer_supplier",
-)
-
-# Round-9 rotation (executed per the round-8 script): the 50 names
-# CORRECTNESS_r08 certified green moved into DEMOTED above; the 39
-# previously-DEFERRED, never-certified queries are now non-tail, so they
-# float into the round-9 prefix in module registration order, leaving 11
-# free prefix slots for early round-9 registrations. Any round-9 query
-# registered AFTER those 11 slots fill goes into this tuple so it never
-# evicts a query whose only certification chance is this round.
-# Invariant (re-checked by tools/check_rotation.py and
-# tests/test_registry.py): list(REGISTRY)[:50] has zero overlap with the
-# union of hash_match:true names across CORRECTNESS_r01..r08.
-# Round-9 post-prefix registrations (workload/analytics9.py, imported
-# last): all oracle-backed, none can certify this round because the
-# 50-slot prefix is already full of never-certified names — they float
-# into the ROUND-10 prefix in this order.
-#
-# ROUND-10 ROTATION (executed, the round-8/9 pattern): the 50 names
-# CORRECTNESS_r09 certified green moved into DEMOTED above; the 27
-# previously-DEFERRED round-9 registrations are now non-tail, so they
-# float into the round-10 prefix in module registration order, leaving
-# 23 free prefix slots for early round-10 registrations. Any round-10
-# query registered AFTER those slots fill goes into this tuple so it
-# never evicts a query whose only certification chance is this round.
-# Invariant (re-checked by tools/check_rotation.py and
-# tests/test_registry.py): list(REGISTRY)[:50] has zero overlap with the
-# union of hash_match:true names across CORRECTNESS_r01..r09.
-#
-# ROUND-11 ROTATION EXECUTED: the 50 CORRECTNESS_r10-green names moved
-# into DEMOTED above ("driver-green round 10" block); the 17 analytics11
-# names plus the first 33 analytics12 names were promoted out of this
-# tuple so they form the round-11 prefix. tools/check_rotation.py: OK.
-#
-# ROUND-12 ROTATION SCRIPT (execute first thing next round): (1) move the
-# names CORRECTNESS_r11 certifies green into DEMOTED above under a
-# "driver-green round 11" comment; (2) move the next never-certified
-# leftovers (the remaining analytics12 tail + analytics13/14/15 names
-# below) out of this tuple so they float into the round-12 prefix; (3)
-# run tools/check_rotation.py — it must print PASS.
-DEFERRED: tuple[str, ...] = (
-    # ROUND-11 ROTATION EXECUTED: the 17 analytics11 names and the first
-    # 33 analytics12 names were promoted out of this tuple into the
-    # round-11 prefix (they are the 50 never-certified names the driver
-    # samples this round). What remains below floats into the round-12
-    # prefix at the next rotation.
-    # jl_distortion_audit was the 50th promoted name until
-    # bucket_counts_approx took prefix slot 1 (to supersede its stale
-    # r04 err:no_oracle row); it re-defers at the head of the tier.
-    # round-12-candidate registrations (workload/analytics12.py), tail:
-    # round-12-candidate registrations, second tranche
-    # (workload/analytics13.py).
-    # round-12-candidate registrations, third tranche
-    # (workload/analytics14.py).
-    # round-12-candidate registrations, fourth tranche
-    # (workload/analytics15.py).
-    # round-12-candidate registrations, fifth tranche
-    # (workload/analytics16.py): new API surfaces — parquet_meta +
-    # graphml + geojson Python DataSources, both UDTF forms, append-mode
-    # eviction + foreachBatch streaming — plus five new-territory
-    # rollups. Tops round-12 prefix supply up to exactly 50.
-    # round-13-candidate registrations, FINAL tranche
-    # (workload/analytics17.py): exactly 36 names so the round-13
-    # rotation drains DEFERRED to empty (VERDICT r11 minting budget).
-)
-
-
 def load_all() -> None:
-    """Import every workload module so REGISTRY is fully populated, then
-    rotate DEMOTED names to the tail (insertion order is the driver's
-    sampling order)."""
+    """Import every workload module so REGISTRY is fully populated.
+
+    REGISTRY keeps registration order (the order ``queries()`` hands the
+    driver), except that oracle-less rows-only queries sort after every
+    oracle-backed one: the driver samples a prefix, and a rows-only name
+    there could only report ``err:no_oracle``."""
     from . import mobility  # noqa: F401
     from . import tpch  # noqa: F401
     from . import text  # noqa: F401
@@ -593,48 +53,16 @@ def load_all() -> None:
     from . import temporal  # noqa: F401
     from . import pings  # noqa: F401
     from . import cdc  # noqa: F401
-    # analytics9 is imported LAST by contract: its queries register after
-    # the fixed round-9 prefix-50 and can never evict a query whose only
-    # certification chance is this round.
     from . import analytics9  # noqa: F401
-    # analytics10 after analytics9: round-10 registrations fill the prefix
-    # slots left after the 27 never-certified round-9 names.
     from . import analytics10  # noqa: F401
-    # analytics11 last: every query it registers is in DEFERRED (round-11
-    # candidates, sweep-verified now).
     from . import analytics11  # noqa: F401
-    # analytics12 after analytics11: also fully DEFERRED (round-12
-    # candidates that top up the round-11 prefix to a full 50).
     from . import analytics12  # noqa: F401
-    # analytics13: second round-12-candidate tranche, fully DEFERRED.
     from . import analytics13  # noqa: F401
-    # analytics14: third round-12-candidate tranche, fully DEFERRED.
     from . import analytics14  # noqa: F401
-    # analytics15: fourth round-12-candidate tranche, fully DEFERRED.
     from . import analytics15  # noqa: F401
-    # analytics16: fifth round-12-candidate tranche (round-11 surface
-    # registrations), fully DEFERRED.
     from . import analytics16  # noqa: F401
-    # analytics17: round-13-candidate tranche (the FINAL one), fully
-    # DEFERRED until the round-13 rotation.
     from . import analytics17  # noqa: F401
 
-    unknown = (set(DEMOTED) | set(DEFERRED)) - REGISTRY.keys()
-    if unknown:
-        # a typo'd/renamed DEMOTED/DEFERRED entry would otherwise silently
-        # leave a proxy in the driver-certified 50-prefix and push a product
-        # stage out
-        raise RuntimeError(
-            f"DEMOTED/DEFERRED names not in REGISTRY: {sorted(unknown)}"
-        )
-    tail = set(DEMOTED) | set(DEFERRED)
-    ordered = [n for n in REGISTRY if n not in tail]
-    ordered += [n for n in DEFERRED if n in REGISTRY]
-    ordered += [n for n in DEMOTED if n in REGISTRY]
-    if list(REGISTRY) != ordered:
-        reg = {n: REGISTRY[n] for n in ordered}
-        REGISTRY.clear()
-        REGISTRY.update(reg)
-        osql = {n: ORACLES[n] for n in ordered if n in ORACLES}
-        ORACLES.clear()
-        ORACLES.update(osql)
+    ordered = {n: REGISTRY[n] for n in sorted(REGISTRY, key=lambda n: n not in ORACLES)}
+    REGISTRY.clear()
+    REGISTRY.update(ordered)

@@ -9,11 +9,6 @@ inequality statistics over the events stream, mobility transition
 information measures, corpus divergence/novelty measures, and ANN
 margin / probe-cost diagnostics.
 
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all`` — every
-query here registers AFTER the 27 never-certified round-9 names, filling
-the remaining round-10 driver prefix slots (tools/check_rotation.py
-enforces the invariant).
-
 Reference lineage: the rank/argmax shapes extend W4
 (ntl_queries.py:41-47) to global cardinality; the sketch verdicts are
 the A1/A5 aggregates (SURVEY §2.4) in their approximate 100 TB form;

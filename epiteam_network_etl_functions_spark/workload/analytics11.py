@@ -1,16 +1,10 @@
-"""Round-11 analytics (registered into the DEFERRED tier this round:
-sweep-verified now, they float into the round-11 driver prefix).
+"""Round-11 analytics.
 
 Families: distribution-drift monitoring (PSI), categorical sequence
 structure on orders, per-customer cadence burstiness, supply-base
 concentration, corpus diversity (Simpson), embedding-coordinate ANOVA,
 uniformity goodness-of-fit, and the home/work separation mobility
 product.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is listed in ``workload.DEFERRED`` so nothing can evict a
-round-10 query from the driver prefix (the rotation invariant
-tools/check_rotation.py enforces).
 """
 
 from __future__ import annotations

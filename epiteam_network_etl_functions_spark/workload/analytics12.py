@@ -1,6 +1,4 @@
-"""Round-12-candidate analytics (registered into the DEFERRED tier in
-round 10: sweep-verified now, they fill the round-11 driver prefix
-together with the ``analytics11`` family).
+"""Round-12 analytics.
 
 Families: merchandising rollups on the reduced TPC-H slice (return
 shares, tax x discount grid, counterfactual discount caps, domestic
@@ -15,11 +13,6 @@ All money/rate arithmetic uses the exact integer quantization
 discipline from ``workload.tpch`` (cents / basis points as BIGINT;
 DECIMAL(38,0) for product sums) so every oracle hash-matches
 bit-for-bit; the only doubles are explicitly rounded terminal ratios.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is listed in ``workload.DEFERRED`` so nothing can evict a
-round-10 query from the driver prefix (the rotation invariant
-``tools/check_rotation.py`` enforces).
 """
 
 from __future__ import annotations

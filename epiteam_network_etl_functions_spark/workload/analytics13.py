@@ -1,6 +1,4 @@
-"""Round-12-candidate analytics, second tranche (DEFERRED tier —
-sweep-verified now, they enter a driver prefix at the round-12
-rotation).
+"""Round-12 analytics, second tranche.
 
 Families: distributional finance rollups (per-segment Gini via the
 distributed rank kernel, monthly anomaly z-scores, customer value CV),
@@ -14,9 +12,6 @@ profile, hash-partition balance, and a compaction bin plan.
 
 Exact-arithmetic discipline as everywhere: integer cents/micros for
 all sums, doubles only as explicitly rounded terminal ratios.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is in ``workload.DEFERRED``.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Round-12-candidate analytics, third tranche (DEFERRED tier).
+"""Round-12 analytics, third tranche.
 
 Four audits a storage/statistics engineer runs before committing a
 100 TB layout or a sampling shortcut: bucketed Kolmogorov-Smirnov fit
@@ -6,9 +6,6 @@ of inter-arrival gaps against the exponential model, per-source
 log-normal length parameters, dictionary-encoding gain estimates for
 the low-cardinality string columns, and the deterministic-sample
 estimation-error curve that prices approximate aggregation.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is in ``workload.DEFERRED``.
 """
 
 from __future__ import annotations

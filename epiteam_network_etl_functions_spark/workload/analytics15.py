@@ -1,4 +1,4 @@
-"""Round-12-candidate analytics, fourth tranche (DEFERRED tier).
+"""Round-12 analytics, fourth tranche.
 
 Families: nation/brand revenue structure (volatility, top-brand
 argmax), value-quintile mixes on the rank kernel, weekday interaction
@@ -7,9 +7,6 @@ autocorrelation, session composition (type richness, positional
 value), linguistics (Zipf's law of abbreviation on the kernel),
 ANN radius calibration, and the mergeable-aggregation consistency
 check that makes map-side combine algebra visible as a certified row.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is in ``workload.DEFERRED``.
 """
 
 from __future__ import annotations

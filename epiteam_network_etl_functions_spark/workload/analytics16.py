@@ -1,5 +1,5 @@
-"""Round-12-candidate registrations, fifth tranche (DEFERRED tier):
-NEW API SURFACES as driver-certified queries.
+"""Round-12 registrations, fifth tranche: new API surfaces as
+driver-certified queries.
 
 The relational idea space over the ten tables is close to mined out
 (428 queries); marginal coverage now lives in surfaces the engine
@@ -19,9 +19,6 @@ exposes but the driver has never certified:
 plus five rollups in genuinely uncovered analytics territory
 (Cramér's V effect size, two-sample KS across tables, sentence
 segmentation, char-class census, unionByName schema evolution).
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is in ``workload.DEFERRED``.
 """
 
 from __future__ import annotations

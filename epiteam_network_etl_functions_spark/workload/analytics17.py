@@ -1,8 +1,7 @@
-"""Round-13-candidate analytics (DEFERRED tier) — the FINAL tranche.
+"""Round-13 analytics — the final tranche.
 
-VERDICT r11 set the minting budget at exactly 36 names so the round-13
-rotation drains DEFERRED to empty and every registered query is
-driver-certified. Families here were vetted against all 454 existing
+VERDICT r11 set the minting budget at exactly 36 names so that every
+registered query is driver-certified. Families here were vetted against all 454 existing
 names (PLANS.md idea bank discipline; the bank's
 colocation_neighbor_jaccard_topk was dropped on re-check — it
 duplicates the certified neighbor_jaccard_links — and the text-regex
@@ -29,9 +28,6 @@ which would make them degenerate at every SF):
   name blocking, stylometric Burrows' Delta, decision-stump Gini gain,
   type-hour mutual information, Simpson's-paradox sign-flip audit, and
   the TPC-H Q19 disjunctive-bracket pushdown shape.
-
-IMPORT ORDER CONTRACT: imported LAST by ``workload.load_all``; every
-name here is in ``workload.DEFERRED`` until the round-13 rotation.
 """
 
 from __future__ import annotations

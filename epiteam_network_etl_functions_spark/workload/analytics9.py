@@ -2,12 +2,6 @@
 information-theoretic corpus/source measures, 2-hop graph reach, and a
 certified stream-stream join.
 
-IMPORT ORDER CONTRACT: this module is imported LAST by
-``workload.load_all``, so every query here registers AFTER the fixed
-round-9 prefix-50 — nothing in this file can evict a query whose only
-certification chance is the current round (the rotation invariant
-tools/check_rotation.py enforces).
-
 Reference lineage: extends the robust-stats family (VERDICT r8 §2.4) and
 the graph analytics the reference computes on collected networkx graphs
 (NetworkBuilder.py) as distributed plans; the rank tests are the

@@ -99,29 +99,15 @@ def test_entry_smoke(spark):
 
 
 def test_driver_prefix_is_exactly_the_uncertified_set():
-    """The external driver snapshots the first 50 registered names; a green
-    row in any round certifies a query permanently. Invariant: the prefix
-    must be exactly the non-demoted set (every never-certified query inside,
-    nothing wasted on already-certified proxies), each with an oracle —
-    a registration-order drift would silently burn certification slots."""
+    """The external driver samples a prefix of queries(); a sampled name
+    without an oracle comes back ``err:no_oracle``. The never-certified
+    set is now empty (tests/test_round12.py locks that), so the prefix
+    invariant reduces to order: registration order, with every
+    oracle-backed query ahead of the oracle-less rows-only ones."""
     from epiteam_network_etl_functions_spark import workload
 
     workload.load_all()
     names = list(workload.REGISTRY)
-    fresh = [
-        n
-        for n in names
-        if n not in workload.DEMOTED and n not in workload.DEFERRED
-    ]
-    assert len(fresh) <= 50, (
-        f"{len(fresh)} uncertified non-deferred queries exceed the 50-slot "
-        "driver prefix — demote certified proxies (or defer late additions) "
-        "before adding more"
-    )
-    assert names[: len(fresh)] == fresh
-    # the DEFERRED tier sits immediately after the prefix, before the
-    # certified tail, so it inherits the freed slots at the next rotation
-    deferred = [n for n in workload.DEFERRED if n in workload.REGISTRY]
-    assert names[len(fresh) : len(fresh) + len(deferred)] == deferred
-    missing = [n for n in fresh + deferred if n not in workload.ORACLES]
-    assert not missing, f"prefix/deferred queries without oracles: {missing}"
+    n_oracles = len(workload.ORACLES)
+    assert set(names[:n_oracles]) == set(workload.ORACLES)
+    assert list(entrymod.queries()) == names

@@ -12,7 +12,6 @@ from epiteam_network_etl_functions_spark.operators.graphs import (
     _decode_same_block,
     block_ranges,
     sample_nodes,
-    sample_nodes_distributed,
     sbm_edges,
     sbm_edges_binomial,
 )
@@ -20,9 +19,10 @@ from epiteam_network_etl_functions_spark.operators.graphs import (
 
 def test_distributed_node_table_matches_list_builder(spark):
     scaled = {"x": 40, "y": 1, "z": 25}
-    a = sorted(map(tuple, sample_nodes(scaled, spark).collect()))
-    b = sorted(map(tuple, sample_nodes_distributed(scaled, spark).collect()))
-    assert a == b
+    expected = sorted(
+        (lo + i, b) for b, (lo, n) in block_ranges(scaled).items() for i in range(n)
+    )
+    assert sorted(map(tuple, sample_nodes(scaled, spark).collect())) == expected
 
 
 def test_decode_same_block_is_bijection():
