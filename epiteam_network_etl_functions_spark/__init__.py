@@ -11,7 +11,7 @@ Layout:
     constants   sentinel values and shared literals
     operators/  pure DataFrame-in -> DataFrame-out kernels
     functions/  the only Python-row code (vectorized pandas UDFs), gated deps
-    sources/    IO helpers (partitioned parquet, csv, checkpointing)
+    sources/    IO helpers (partitioned parquet, csv, custom data sources)
     streaming/  Structured Streaming variants of the batch windows
     plans/      composed multi-stage pipelines (home-location, contact matrix)
     workload/   named queries over /root/testdata tables + DuckDB oracle SQL

@@ -91,11 +91,22 @@ def _write_ir(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return spark.read.schema(df.schema).parquet(path)
 
 
+# the stage flag whose run writes each restartable IR table
+_IR_STAGE = {
+    "located": "--gen-tables",
+    "interactions": "--gen-tables",
+    "homes": "--gen-tables",
+    "contact_probs": "--prob-matrix",
+    "network_nodes": "--build-network",
+    "network_edges": "--build-network",
+}
+
+
 def _read_ir(spark: SparkSession, args: argparse.Namespace, name: str) -> DataFrame:
     """Stage IR a previous invocation left behind."""
     path = _out(args, f"{name}.parquet")
     if not os.path.exists(path):
-        sys.exit(f"no {path}: run --gen-tables first")
+        sys.exit(f"no {path}: run {_IR_STAGE[name]} first")
     print(f"# {name}: reusing {path}", file=sys.stderr)
     return spark.read.parquet(path)
 
@@ -177,7 +188,7 @@ def prob_matrix(spark, args, tables: dict | None) -> DataFrame:
     )
     # contact_prob_table attaches homes itself (via observed_contacts); a
     # pre-join here would be a pure wasted shuffle.
-    probs = contact_prob_table(None, homes.select("caid", "home_ageb"), pairs=pairs)
+    probs = contact_prob_table(pairs, homes.select("caid", "home_ageb"))
     probs = _write_ir(spark, probs, _out(args, "contact_probs.parquet"))
     labels, matrix = probs_to_matrix(probs, "a_home_ageb", "b_home_ageb")
     write_matrix_npy(_out(args, "probs_matrix.npy"), matrix)
@@ -190,13 +201,9 @@ def prob_matrix(spark, args, tables: dict | None) -> DataFrame:
 def build_network(spark, args, tables: dict | None, probs: DataFrame | None):
     """Stage 3 (build_network): scale block sizes, SBM edge sampling,
     GraphML export."""
-    homes = (
-        tables["homes"]
-        if tables
-        else spark.read.parquet(_out(args, "homes.parquet"))
-    )
+    homes = tables["homes"] if tables else _read_ir(spark, args, "homes")
     if probs is None:
-        probs = spark.read.parquet(_out(args, "contact_probs.parquet"))
+        probs = _read_ir(spark, args, "contact_probs")
     sizes = {
         r["home_ageb"]: r["size"]
         for r in group_sizes(homes, block_col="home_ageb", id_col="caid").collect()
@@ -254,8 +261,8 @@ def seir_sweep(spark, args, nodes: DataFrame | None, edges: DataFrame | None):
     rates converted to per-step probabilities p = 1 - exp(-rate)
     (divergence quantified in DETERMINISM.md §8)."""
     if nodes is None:
-        nodes = spark.read.parquet(_out(args, "network_nodes.parquet"))
-        edges = spark.read.parquet(_out(args, "network_edges.parquet"))
+        nodes = _read_ir(spark, args, "network_nodes")
+        edges = _read_ir(spark, args, "network_edges")
     n_nodes = nodes.count()
     n_edges = edges.count()
     if n_edges > args.seir_max_collect_edges:
@@ -325,8 +332,8 @@ def rg_stage(spark, args, tables: dict | None) -> None:
     if tables:
         located, homes = tables["located"], tables["homes"]
     else:
-        located = spark.read.parquet(_out(args, "located.parquet"))
-        homes = spark.read.parquet(_out(args, "homes.parquet"))
+        located = _read_ir(spark, args, "located")
+        homes = _read_ir(spark, args, "homes")
     rgs = _write_ir(
         spark,
         device_rg(located, id_col="caid", cell_col="h3index_15"),
@@ -361,17 +368,16 @@ def corpus_stage(spark, args) -> None:
     docs = catalog.load(spark, args.sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") >= args.bench_max_id)
     bench = docs.where(F.col("doc_id") < args.bench_max_id)
-    cfg = CorpusConfig()
     res = run_corpus_pipeline(
         corpus,
         bench,
-        cfg,
+        CorpusConfig(),
         out_dir=_out(args, "corpus_shards"),
         shards=args.corpus_shards,
-        materialize=True,
     )
     res.packed.write.mode("overwrite").parquet(_out(args, "corpus_packed.parquet"))
-    corpus_funnel(corpus, bench, cfg).toPandas().to_csv(
+    # the funnel counts the boundaries this run already materialized
+    corpus_funnel(corpus, res).toPandas().to_csv(
         _out(args, "corpus_funnel.csv"), index=False
     )
     print(

@@ -1,19 +1,18 @@
 """End-to-end contact-matrix pipeline (reference §3.1 NetworkBuilder staging):
-pings -> presence -> sizes/total -> observed -> total-vs-observed -> dense
-probability matrix -> (optionally) SBM network.
+co-location pairs -> sizes/total -> observed -> total-vs-observed -> dense
+probability matrix.
 
-Stage boundaries that the reference materializes to `side_results/` parquet
-(NetworkBuilder.py:120,151,209,260) are kept as *optional* checkpoints —
-they are the pipeline's restart points, not a memory crutch (Spark spills
-shuffles on its own).
+The stage boundaries that the reference materializes to `side_results/`
+parquet (NetworkBuilder.py:120,151,209,260) are the CLI's stage IR
+(cli.gen_tables / cli.prob_matrix); this module is the lazy plan between
+them.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..operators.colocation import colocation_pairs
 from ..operators.contacts import (
     contact_probs,
     group_sizes,
@@ -21,30 +20,18 @@ from ..operators.contacts import (
     total_contacts,
     total_vs_observed,
 )
-from ..operators.timebucket import with_time_bucket
-from ..sources.io import checkpoint as ckpt
 
 
 def contact_prob_table(
-    pings: DataFrame,
+    pairs: DataFrame,
     homes: DataFrame,
     id_col: str = "caid",
-    cell_col: str = "h3index_15",
-    ts_col: str = "cdmx_datetime",
     home_col: str = "home_ageb",
-    bucket_seconds: int = 600,
-    checkpoint_dir: str | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Long-form (a_block, b_block, total_pairs, observed, prob) table —
-    the full NetworkBuilder get_tables() flow as one lazy DAG. Pass a
-    precomputed ``pairs`` table to reuse the co-location join output
-    across consumers (the widest shuffle in the product)."""
-    if pairs is None:
-        b = with_time_bucket(pings, ts_col, bucket_seconds)
-        pairs = colocation_pairs(b, id_col=id_col, cell_col=cell_col, tw_col="tw")
-    if checkpoint_dir:
-        pairs = ckpt(pairs, f"{checkpoint_dir}/pairs")
+    the NetworkBuilder get_tables() flow after co-location as one lazy DAG.
+    ``pairs`` holds the distinct ordered (a_<id>, b_<id>) co-location
+    pairs, the widest shuffle in the product, computed once upstream."""
     homes = homes.localCheckpoint()  # feeds sizes + both endpoint attaches
     sizes = group_sizes(homes, block_col=home_col, id_col=id_col)
     total = total_contacts(sizes, block_col=home_col)

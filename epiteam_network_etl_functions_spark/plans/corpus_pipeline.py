@@ -1,7 +1,8 @@
 """The LLM-corpus preparation pipeline as one composition.
 
-Mirrors plans/full_pipeline.py (and the reference's own staged driver,
-NetworkBuilder.py:264-284) for the training-data side of the engine:
+Mirrors the staged mobility CLI (cli.py, after the reference's own staged
+driver, NetworkBuilder.py:264-284) for the training-data side of the
+engine:
 
     raw corpus -> quality gates (Gopher-family rules)
                -> exact dedup (md5 keeper)
@@ -43,8 +44,7 @@ from ..operators.text import (
 
 @dataclass(frozen=True)
 class CorpusConfig:
-    """Gate thresholds + dedup/packing parameters (one knob object, the
-    analog of full_pipeline.PipelineConfig)."""
+    """Gate thresholds + dedup/packing parameters (one knob object)."""
 
     min_tokens: int = 15
     max_rep_ratio: float = 0.10
@@ -217,57 +217,42 @@ def run_corpus_pipeline(
     shards: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = False,
 ) -> CorpusResult:
     """The full composition. When ``out_dir`` is given, the surviving
     documents are exported as size-uniform JSONL shards (sources/io).
 
-    ``materialize=True`` localCheckpoints each stage boundary — the
+    Each of the four stage boundaries is localCheckpointed — the
     reference's materialized-stage-IR discipline (every stage writes
-    parquet before the next reads it). Use it when several consumers
-    read the stage frames (the funnel report taps counts off every
-    boundary; without it each consumer replays the whole upstream
-    chain). At production scale swap localCheckpoint for a parquet
-    write per stage — same plan shape, restartable."""
+    parquet before the next reads it) — so every consumer of a stage
+    frame (the next stage, the export, the funnel report) reads it
+    without replaying the upstream chain. At production scale swap
+    localCheckpoint for a parquet write per stage — same plan shape,
+    restartable."""
     cfg = cfg or CorpusConfig()
-    mat = (lambda df: df.localCheckpoint()) if materialize else (lambda df: df)
-    gated = mat(gate_quality(docs, cfg, id_col, text_col))
-    exact = mat(dedup_exact(gated, id_col, text_col))
-    fuzzy = mat(dedup_fuzzy(exact, cfg, id_col, text_col))
-    clean = mat(decontaminate(fuzzy, bench, cfg, id_col, text_col))
+    gated = gate_quality(docs, cfg, id_col, text_col).localCheckpoint()
+    exact = dedup_exact(gated, id_col, text_col).localCheckpoint()
+    fuzzy = dedup_fuzzy(exact, cfg, id_col, text_col).localCheckpoint()
+    clean = decontaminate(fuzzy, bench, cfg, id_col, text_col).localCheckpoint()
     packed = pack_bins(clean, cfg, id_col, text_col)
     if out_dir is not None:
         from ..sources.io import write_jsonl_shards
 
-        # The export consumes `clean` twice (shard-count job + write);
-        # cache across those two actions only, then release — the result
-        # frames stay lazy/uncached (no session-pinned storage).
-        export_df = clean.cache()
-        n = export_df.count()
+        n = clean.count()
         write_jsonl_shards(
-            export_df, out_dir, records_per_shard=max(1, -(-n // shards))
+            clean, out_dir, records_per_shard=max(1, -(-n // shards))
         )
-        export_df.unpersist(blocking=False)
     return CorpusResult(gated, exact, fuzzy, clean, packed)
 
 
-def corpus_funnel(
-    docs: DataFrame,
-    bench: DataFrame,
-    cfg: CorpusConfig | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-stage survival report (stage_id, stage, docs_in, docs_out) — the
-    dedup-rate audit every corpus build publishes. One scalar count per
-    stage unioned, then a lag window fills docs_in from the previous row;
-    all counts are exact BIGINTs, the stage_id is the unique sort key."""
+def corpus_funnel(docs: DataFrame, res: CorpusResult) -> DataFrame:
+    """Per-stage survival report (stage_id, stage, docs_in, docs_out) of
+    a finished ``run_corpus_pipeline(docs, ...)`` run — the dedup-rate
+    audit every corpus build publishes. One scalar count per
+    materialized stage boundary unioned, then a lag window fills docs_in
+    from the previous row; all counts are exact BIGINTs, the stage_id is
+    the unique sort key."""
     from pyspark.sql import Window
 
-    cfg = cfg or CorpusConfig()
-    res = run_corpus_pipeline(
-        docs, bench, cfg, id_col=id_col, text_col=text_col, materialize=True
-    )
     frames = (
         docs,
         res.gated,

@@ -114,21 +114,6 @@ def global_home_winner(
     )
 
 
-def attach_home(
-    pings: DataFrame,
-    homes: DataFrame,
-    id_col: str = "caid",
-    home_col: str = "home_ageb",
-    sentinel: str = SENTINEL_AGEB_13,
-) -> DataFrame:
-    """Left join + NULL -> sentinel (J3: ntl_queries.py:50-65,
-    IndexingHomeAgebs.py:112-132)."""
-    h = homes.select(id_col, home_col)
-    return pings.join(h, id_col, "left").withColumn(
-        home_col, F.coalesce(F.col(home_col), F.lit(sentinel))
-    )
-
-
 def cells_to_regions_dim(
     regions: DataFrame,
     cells_col: str = "cells",

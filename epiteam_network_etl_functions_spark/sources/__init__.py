@@ -7,5 +7,4 @@ from .io import (  # noqa: F401
     write_single,
     read_csv,
     write_csv,
-    checkpoint,
 )

@@ -125,14 +125,6 @@ def read_pickle(path: str):
         return pickle.load(f)
 
 
-def checkpoint(df: DataFrame, path: str) -> DataFrame:
-    """Materialize a stage to parquet and re-read it (the reference's
-    restartable-pipeline idiom, NetworkBuilder.py:120,151,209,260). Cuts
-    lineage and gives the optimizer fresh, accurate stats for what follows."""
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def write_range_clustered(
     df: DataFrame,
     path: str,

@@ -166,6 +166,7 @@ def streaming_enrich(
     re-read per micro-batch (picking up dimension updates) and needs no
     watermark — only stream-stream joins buffer state. Broadcast is the
     right physical strategy for a dimension at any scale; left join keeps
-    stream rows whose key is missing from the dimension (sentinel
-    semantics handled downstream, as in the batch attach_home)."""
+    stream rows whose key is missing from the dimension (the sentinel
+    fallback is the caller's, as in the batch home attribution of
+    cli.gen_tables)."""
     return stream.join(F.broadcast(dim), key, how)

@@ -1129,7 +1129,9 @@ def corpus_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     corpus = d.where(F.col("doc_id") >= _CF_BENCH_MAX_ID)
     bench = d.where(F.col("doc_id") < _CF_BENCH_MAX_ID)
-    return cp.corpus_funnel(corpus, bench, cp.CorpusConfig())
+    return cp.corpus_funnel(
+        corpus, cp.run_corpus_pipeline(corpus, bench, cp.CorpusConfig())
+    )
 
 
 @query(

@@ -4,9 +4,12 @@ co-location network -> contact probabilities -> SBM network -> SEIR curve.
 
     python examples/mobility_demo.py
 
-Everything runs locally in ~a minute; swap the synthetic frame for a real
-partitioned pings dataset (sources.read_days + calendar_utils windows) and
-the same code runs on a cluster.
+The synthetic pings and their (cell, cve_geo) dim are written as parquet
+to a temp dir and run through the staged CLI in one call, exactly as
+``python -m epiteam_network_etl_functions_spark.cli 2020-01-14 --pings
+... --dim ... --gen-tables --prob-matrix --build-network --seir`` would.
+Everything runs locally in ~a minute; point ``--pings``/``--dim`` at a
+real dataset and the same stages run on a cluster.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ import datetime as dt
 import os
 import random
 import sys
+import tempfile
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -24,10 +28,7 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from pyspark.sql import Row
 
-from epiteam_network_etl_functions_spark.plans.full_pipeline import (
-    PipelineConfig,
-    run_pipeline,
-)
+from epiteam_network_etl_functions_spark import cli
 from epiteam_network_etl_functions_spark.plans.mobility import cells_to_regions_dim
 from epiteam_network_etl_functions_spark.session import get_session
 
@@ -82,16 +83,27 @@ def main() -> None:
             ]
         )
     )
-    cfg = PipelineConfig(day="2020-01-14", network_nodes=200, seir_t_max=20)
-    res = run_pipeline(spark, pings, dim, cfg)
+    work = tempfile.mkdtemp(prefix="mobility-demo-")
+    pings_path, dim_path = os.path.join(work, "pings"), os.path.join(work, "dim")
+    out = os.path.join(work, "run")
+    pings.write.parquet(pings_path)
+    dim.write.parquet(dim_path)
+    # one call runs every stage; it stops the session when done
+    cli.main(["2020-01-14", "--pings", pings_path, "--dim", dim_path,
+              "--out", out, "--gen-tables", "--prob-matrix",
+              "--build-network", "--seir", "--scale", "200", "--t-max", "20",
+              "--seeds", "1"])
+
+    import pandas as pd
 
     print("\n=== homes (sample) ===")
-    res.homes.show(5, truncate=False)
+    print(pd.read_parquet(os.path.join(out, "homes.parquet")).head(5))
     print("=== contact probabilities ===")
-    res.contact_probs.orderBy("a_home_ageb", "b_home_ageb").show(8)
+    probs = pd.read_parquet(os.path.join(out, "contact_probs.parquet"))
+    print(probs.sort_values(["a_home_ageb", "b_home_ageb"]).head(8))
     print("=== SEIR trajectory ===")
-    res.seir_trajectory.show(10)
-    spark.stop()
+    print(pd.read_csv(os.path.join(out, "seir_trajectories.csv")).head(10))
+    print(f"(stage IR under {out})")
 
 
 if __name__ == "__main__":

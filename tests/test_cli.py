@@ -40,6 +40,9 @@ def _args(out: str, extra: list[str] | None = None):
 # when every consumer re-ran the lazy lineage); about 1.5x the measured
 # count, so a reintroduced recompute fails here as a count, not as noise.
 GEN_TABLES_JOB_BUDGET = 60
+# corpus_stage on the same inputs ran 97 jobs when this budget was set
+# (180 when the funnel re-ran the whole corpus pipeline); about 1.5x.
+CORPUS_STAGE_JOB_BUDGET = 145
 
 
 @pytest.fixture(scope="module")
@@ -172,6 +175,15 @@ def test_cli_stage_restart_reads_prior_ir(spark, chain, tmp_path):
         assert f.readline().strip() == "cve_mun,avg_rg,std_rg,n_devices"
 
 
+def test_cli_restart_names_missing_stage(spark, tmp_path, monkeypatch):
+    """A stage whose prior IR is missing exits with the flag of the stage
+    that writes it, not with a Spark path error."""
+    out = str(tmp_path / "empty")
+    monkeypatch.setattr(cli, "get_session", lambda name: spark)
+    with pytest.raises(SystemExit, match="--build-network"):
+        cli.main(["all", "--out", out, "--seir"])
+
+
 def test_gen_tables_job_budget(chain):
     """Every gen_tables intermediate is computed once: the stage's job
     count stays within a budget measured on the same demo inputs."""
@@ -217,7 +229,15 @@ def test_cli_corpus_stage(spark, tmp_path):
     out = str(tmp_path / "corpus_run")
     os.makedirs(out)
     args = _args(out, ["--corpus", "--corpus-shards", "2"])
-    cli.corpus_stage(spark, args)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-cli-corpus", "corpus_stage job budget")
+    try:
+        cli.corpus_stage(spark, args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # each stage boundary is computed once, the funnel included
+    jobs = len(sc.statusTracker().getJobIdsForGroup("test-cli-corpus"))
+    assert 0 < jobs <= CORPUS_STAGE_JOB_BUDGET, jobs
     # stage IR: gzip JSONL shards, packed bins parquet, funnel CSV
     shard_dir = os.path.join(out, "corpus_shards")
     assert spark.read.json(shard_dir).count() > 0

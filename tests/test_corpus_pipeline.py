@@ -102,7 +102,7 @@ def test_funnel_counts_monotone(spark):
     )
     docs = _docs(spark, [r for r in rows if r[0] >= 20])
     bench = _docs(spark, [r for r in rows if r[0] < 20])
-    fun = corpus_funnel(docs, bench, CFG)
+    fun = corpus_funnel(docs, run_corpus_pipeline(docs, bench, CFG))
     out = sorted((r.stage_id, r.stage, r.docs_in, r.docs_out) for r in fun.collect())
     assert [r[1] for r in out] == list(STAGES)
     assert out[0][2] == out[0][3] == 8  # raw

@@ -1,14 +1,13 @@
 """Sources/sinks: partitioned layout round-trip, partition pruning, csv,
-checkpoint (reference S2/S5/S8/S9/S11)."""
+stage-IR checkpoint (reference S2/S5/S8/S9/S11)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from epiteam_network_etl_functions_spark import catalog
+from epiteam_network_etl_functions_spark import catalog, cli
 from epiteam_network_etl_functions_spark.sources import (
-    checkpoint,
     read_csv,
     read_partitioned,
     write_csv,
@@ -53,9 +52,14 @@ def test_csv_roundtrip(spark, events, tmp_path):
 
 
 def test_checkpoint_roundtrip(spark, events, tmp_path):
+    """The CLI's stage-IR writer materializes a frame and continues from
+    the parquet read back under the frame's own schema."""
     path = str(tmp_path / "ckpt")
     agg = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    back = checkpoint(agg, path)
+    back = cli._write_ir(spark, agg, path)
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in agg.schema
+    ]
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, agg.collect()))
 
 

@@ -5,15 +5,16 @@ pings built in-test."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row, functions as F
 
+from epiteam_network_etl_functions_spark import cli
 from epiteam_network_etl_functions_spark.constants import SENTINEL_AGEB_13
 from epiteam_network_etl_functions_spark.plans.mobility import (
-    attach_home,
     cells_to_regions_dim,
     daily_home_winners,
     extract_day,
@@ -105,12 +106,26 @@ def test_global_winner_prefers_nonsentinel_then_score(spark):
     assert out2["Z"] == "0901200010020"  # longer code wins despite lower score
 
 
-def test_attach_home_sentinel(spark, pings):
-    homes = spark.createDataFrame([Row(caid="A", home_ageb="0901200010010")])
-    out = attach_home(extract_day(pings, "2020-01-14"), homes)
-    got = {r["caid"]: r["home_ageb"] for r in out.select("caid", "home_ageb").distinct().collect()}
-    assert got["A"] == "0901200010010"
-    assert got["B"] == SENTINEL_AGEB_13
+def test_attach_home_sentinel(spark, pings, tmp_path):
+    """A device whose winner cell the dim does not cover gets the 13-zero
+    sentinel home (J3: ntl_queries.py:50-65, IndexingHomeAgebs.py:112-132)
+    in the homes IR cli.gen_tables writes."""
+    pings_path, dim_path = str(tmp_path / "pings"), str(tmp_path / "dim")
+    pings.write.parquet(pings_path)
+    # the dim covers A's night cell only; B's winner cell is unmapped
+    with_cells(
+        spark.createDataFrame([Row(latitude=19.05, longitude=-99.05)]), out_col="cell"
+    ).selectExpr("cell", "'0901200010010' AS cve_geo").write.parquet(dim_path)
+    out = str(tmp_path / "run")
+    args = cli.build_parser().parse_args(
+        ["2020-01-14", "--pings", pings_path, "--dim", dim_path, "--out", out,
+         "--impute-rounds", "0"]
+    )
+    os.makedirs(out)
+    cli.gen_tables(spark, args)
+    homes = spark.read.parquet(os.path.join(out, "homes.parquet"))
+    got = {r["caid"]: r["home_ageb"] for r in homes.collect()}
+    assert got == {"A": "0901200010010", "B": SENTINEL_AGEB_13}  # C: accuracy-gated
 
 
 def test_locate_and_kring_impute(spark):

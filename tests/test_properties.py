@@ -104,9 +104,15 @@ def test_observed_le_total_and_probs_bounded(spark):
     assert bad.count() == 0
 
 
-def test_contact_matrix_plan_end_to_end(spark, tmp_path):
+def test_contact_matrix_plan_end_to_end(spark):
     """Full §3.1 pipeline on synthetic pings: probabilities land in [0,1]
     and the dense matrix round-trips the long table."""
+    from epiteam_network_etl_functions_spark.operators.colocation import (
+        colocation_pairs,
+    )
+    from epiteam_network_etl_functions_spark.operators.timebucket import (
+        with_time_bucket,
+    )
     from epiteam_network_etl_functions_spark.plans.contact_matrix import (
         contact_prob_table,
         probs_to_matrix,
@@ -125,9 +131,11 @@ def test_contact_matrix_plan_end_to_end(spark, tmp_path):
         [Row(caid="A", home_ageb="X"), Row(caid="B", home_ageb="X"),
          Row(caid="C", home_ageb="Y"), Row(caid="D", home_ageb="Y")]
     )
-    probs = contact_prob_table(
-        pings, homes, checkpoint_dir=str(tmp_path / "ck")
+    pairs = colocation_pairs(
+        with_time_bucket(pings, "cdmx_datetime", 600),
+        id_col="caid", cell_col="h3index_15", tw_col="tw",
     )
+    probs = contact_prob_table(pairs, homes)
     got = {(r["a_home_ageb"], r["b_home_ageb"]): r for r in probs.collect()}
     # A-B co-located (both in c1), C-D co-located (c2); X never meets Y.
     assert got[("X", "X")]["observed"] == 2   # (A,B) and (B,A)
