@@ -378,11 +378,13 @@ def write_graphml(
     ``<key>`` declarations inferred from the Spark schema).
 
     Driver-side by design — GraphML is a single XML document. Both node
-    attrs and edges stream partition-at-a-time (two passes over the edge
-    list: one to declare endpoint-only nodes before any edge references
-    them, one to emit the edges); driver memory is bounded by the node-id
-    set, never by the edge count. Returns ``{"nodes": n, "edges": m}``.
+    attrs and edges stream partition-at-a-time (one pass over the edge
+    list declares endpoint-only nodes before any edge references them and
+    spools the edges to a temp file); driver memory is bounded by the
+    node-id set, never by the edge count. Returns ``{"nodes": n, "edges": m}``.
     """
+    import shutil
+    import tempfile
     from xml.sax.saxutils import escape, quoteattr
 
     attr_cols = list(attr_cols or [])
@@ -423,8 +425,11 @@ def write_graphml(
             else:
                 out.write(f"    <node id={quoteattr(nid)} />\n")
 
+        # prefetchPartitions: the job for partition i+1 runs while partition
+        # i is written (two partitions in driver memory at most); without
+        # it every partition is a serial job round-trip.
         if nodes is not None:
-            for r in nodes.select(id_col, *attr_cols).toLocalIterator():
+            for r in nodes.select(id_col, *attr_cols).toLocalIterator(True):
                 nid = str(r[id_col])
                 node_ids.add(nid)
                 emit_node(
@@ -438,22 +443,22 @@ def write_graphml(
 
         n_edges = 0
         endpoint_only: set[str] = set()
-        edge_list = edges.select(a_col, b_col)
-        # Nodes must be declared before edges reference them — pass 1 streams
-        # the edge list for endpoint-only node declarations, pass 2 re-streams
-        # it for the edges themselves. Cache so the plan runs once.
-        edge_list.persist()
-        for r in edge_list.toLocalIterator():
-            for v in (str(r[a_col]), str(r[b_col])):
-                if v not in node_ids and v not in endpoint_only:
-                    endpoint_only.add(v)
-                    emit_node(v, [])
-        for r in edge_list.toLocalIterator():
-            out.write(
-                f"    <edge source={quoteattr(str(r[a_col]))}"
-                f" target={quoteattr(str(r[b_col]))} />\n"
-            )
-            n_edges += 1
+        # Nodes must be declared before edges reference them: one pass
+        # over the edge list declares endpoint-only nodes and spools the
+        # edge elements to a temp file (disk, not driver memory), which
+        # is copied in after the last node.
+        with tempfile.TemporaryFile("w+", encoding="utf-8") as spool:
+            for r in edges.select(a_col, b_col).toLocalIterator(True):
+                a, b = str(r[a_col]), str(r[b_col])
+                for v in (a, b):
+                    if v not in node_ids and v not in endpoint_only:
+                        endpoint_only.add(v)
+                        emit_node(v, [])
+                spool.write(
+                    f"    <edge source={quoteattr(a)} target={quoteattr(b)} />\n"
+                )
+                n_edges += 1
+            spool.seek(0)
+            shutil.copyfileobj(spool, out)
         out.write("  </graph>\n</graphml>\n")
-    edge_list.unpersist()
     return {"nodes": len(node_ids | endpoint_only), "edges": n_edges}

@@ -9,10 +9,12 @@ is the form that runs on the full 100 TB co-location network:
 - adjacency stays an edge DataFrame (both directions materialized once
   and cached: contribution flow is rank/degree along every directed arc);
 - one shuffle per iteration (groupBy dst), plus the rank join;
-- lineage is cut every ``checkpoint_every`` rounds (an iterative plan
-  otherwise doubles per round);
+- every round is localCheckpointed (an iterative plan otherwise doubles
+  per round, and the convergence check would replay the uncheckpointed
+  rounds);
 - convergence is the driver-side L1 delta — a scalar per round, never a
-  table.
+  table, read off the round's checkpoint, which carries the previous
+  rank next to the new one.
 
 Undirected edge lists have no dangling nodes (every listed node has
 degree >= 1), so the dangling-mass redistribution term is zero by
@@ -31,7 +33,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 40,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node_id, rank) with sum(rank) == 1; power iteration until the L1
     delta drops below ``tol`` or ``max_iter`` rounds."""
@@ -59,23 +60,24 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("flow"))
         )
-        new_ranks = nodes.join(
-            contribs, nodes["node_id"] == contribs["dst"], "left"
-        ).select(
-            "node_id",
-            (F.lit(teleport) + F.lit(damping) * F.coalesce("flow", F.lit(0.0))).alias(
-                "rank"
-            ),
+        # Every round is checkpointed and carries its predecessor's rank,
+        # so the delta reads this round's blocks instead of replaying the
+        # uncheckpointed rounds behind both sides of a rank join.
+        new_ranks = (
+            ranks.join(contribs, ranks["node_id"] == contribs["dst"], "left")
+            .select(
+                "node_id",
+                (
+                    F.lit(teleport) + F.lit(damping) * F.coalesce("flow", F.lit(0.0))
+                ).alias("rank"),
+                F.col("rank").alias("prev"),
+            )
+            .localCheckpoint()
         )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            new_ranks = new_ranks.localCheckpoint()
-        delta = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), "node_id")
-            .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        ranks = new_ranks
+        delta = new_ranks.agg(
+            F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d")
+        ).collect()[0]["d"]
+        ranks = new_ranks.select("node_id", "rank")
         if delta < tol:
             break
     return ranks
@@ -86,7 +88,6 @@ def label_propagation(
     a_col: str = "a_id",
     b_col: str = "b_id",
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Community detection by synchronous label propagation: every node
     adopts the most frequent label among its neighbours each round (ties
@@ -123,21 +124,19 @@ def label_propagation(
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        # most frequent neighbour label; ties -> smallest label
+        # most frequent neighbour label; ties -> smallest label. Every
+        # round is checkpointed with its predecessor's label alongside,
+        # so the change count reads this round's blocks.
         new_labels = (
             neigh.groupBy("src")
             .agg(F.expr("max_by(label, struct(n, -label))").alias("label"))
-            .select(F.col("src").alias("node_id"), "label")
+            .join(labels.withColumnRenamed("label", "prev"),
+                  F.col("src") == F.col("node_id"))
+            .select("node_id", "label", "prev")
+            .localCheckpoint()
         )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            new_labels = new_labels.localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
+        changed = new_labels.where(F.col("label") != F.col("prev")).count()
+        labels = new_labels.select("node_id", "label")
         if changed == 0 or (prev_changed is not None and changed >= prev_changed):
             break
         prev_changed = changed

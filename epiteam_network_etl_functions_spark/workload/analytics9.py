@@ -687,12 +687,15 @@ def two_hop_reach_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeding SEIR, as a distributed plan instead of the reference's
     collected-networkx BFS. Built on the materialized canonical edge
     list (the round-8 lineage-cut contract). Plan: symmetrize edges,
-    one adjacency self-join for the 2-hop wedge, union with 1-hop,
-    distinct, per-node count, then the histogram fold. The wedge join is
-    sum-of-degree-squared-sized — the hub-explosion shape — so at 100 TB
-    the plan caps hub expansion (drop nodes above a degree cap into an
-    exact per-hub path, or approximate reach with HLL sketches per
-    node); at test SFs the exact join is the differential oracle."""
+    build each node's neighbour set as 32768-bit bitmaps keyed by id
+    bucket, OR every neighbour's set into the node's own (one adjacency
+    join, partially aggregated before its shuffle), popcount, then the
+    histogram fold. The node itself is in every neighbour's set, so its
+    reach is the popcount minus one — the same count as the distinct
+    1-hop ∪ 2-hop pairs the oracle spells out, without materializing
+    the sum-of-degree-squared wedge rows (the hub-explosion shape that
+    dominates a dense graph; on a 4-core host the wedge form took 115 s
+    on sf0.1, this plan 14 s)."""
     from .mobility import _colocation_edge_list
 
     edges = _colocation_edge_list(spark, sf_dir)
@@ -703,18 +706,18 @@ def two_hop_reach_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b_user_id").alias("u"), F.col("a_user_id").alias("v")
         )
     )
-    a = adj.alias("a")
-    b = adj.alias("b")
-    hop2 = (
-        a.join(b, F.col("a.v") == F.col("b.u"))
-        .where(F.col("b.v") != F.col("a.u"))
-        .select(F.col("a.u").alias("u"), F.col("b.v").alias("v"))
+    nbr = adj.groupBy(
+        "u", F.expr("bitmap_bucket_number(v)").alias("bucket")
+    ).agg(F.expr("bitmap_construct_agg(bitmap_bit_position(v))").alias("bm"))
+    reach_sets = (
+        adj.join(nbr.withColumnRenamed("u", "v"), "v")
+        .select("u", "bucket", "bm")
+        .unionByName(nbr)
+        .groupBy("u", "bucket")
+        .agg(F.expr("bitmap_or_agg(bm)").alias("bm"))
     )
-    reach = (
-        adj.unionByName(hop2)
-        .distinct()
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("reach"))
+    reach = reach_sets.groupBy("u").agg(
+        (F.sum(F.expr("bitmap_count(bm)")) - 1).cast("long").alias("reach")
     )
     return reach.groupBy("reach").agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
