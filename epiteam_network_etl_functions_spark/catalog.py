@@ -71,58 +71,3 @@ def register_all(spark: SparkSession, sf_dir: str) -> None:
     """Temp views for spark.sql workloads (reference §3.3 notebook pattern)."""
     for name in TABLE_NAMES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# Cache partitioning for a multi-query session: wide enough that map-heavy
-# pipelines (md5 signatures, vector math) parallelize off the cached scan,
-# narrow enough that task launch doesn't dominate at bench scale. At cluster
-# scale the same call with bigger counts is the standard warm-cache pattern
-# (spark.catalog.cacheTable before an interactive session).
-#
-# Entries are (n_partitions, cluster_key | None). A keyed entry caches the
-# table HASH-PARTITIONED on its hot join/group key — the in-memory analog of
-# bucketing the table at rest (the same layout argument as the bucketed
-# co-location variant): InMemoryTableScan reports the child's
-# outputPartitioning, so every join or aggregate on that key downstream is
-# exchange-free. lineitem and orders share the orderkey domain at the SAME
-# width, so lineitem⋈orders (the spine of every TPC-H shape) needs zero
-# shuffles; events clusters on user_id, the partition key of the session /
-# as-of / per-user-window family. Keys with uniform cardinality (orderkey,
-# user_id) — hot-key skew would need salting instead.
-CACHE_PARTS: dict[str, tuple[int, str | None]] = {
-    "lineitem": (16, "l_orderkey"),
-    "orders": (16, "o_orderkey"),
-    "events": (8, "user_id"),
-    # doc_id clustering: Generate/Project preserve the child's partitioning,
-    # and HashPartitioning(doc_id) satisfies ClusteredDistribution over any
-    # key set containing doc_id — so explode→groupBy(doc_id, term) and the
-    # per-document rank windows all skip their exchange.
-    "documents": (16, "doc_id"),
-    "embeddings": (8, None),
-    "customer": (2, None),
-    "part": (2, None),
-    "supplier": (1, None),
-    "nation": (1, None),
-    "region": (1, None),
-}
-
-
-def cache_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    parts: dict[str, tuple[int, str | None]] | None = None,
-) -> None:
-    """Materialize every table in memory once so a session running many
-    queries (bench.py, notebooks) amortizes the parquet scan + decode across
-    all of them. Subsequent ``load`` calls return the cached plans. Tables
-    with a cluster key in ``parts`` are cached hash-partitioned on it (see
-    CACHE_PARTS) so keyed joins/aggregates downstream skip their exchange."""
-    parts = parts or CACHE_PARTS
-    sc = spark.sparkContext
-    for name in TABLE_NAMES:
-        df = load(spark, sf_dir, name)
-        n, key = parts.get(name, (4, None))
-        part = df.repartition(n, F.col(key)) if key else df.repartition(n)
-        cached = part.cache()
-        cached.count()  # eager: all queries below should hit memory
-        _LOAD_CACHE[(sc.applicationId, sc.startTime, sf_dir, name)] = cached

@@ -248,11 +248,11 @@ def corpus_funnel(docs: DataFrame, res: CorpusResult) -> DataFrame:
     """Per-stage survival report (stage_id, stage, docs_in, docs_out) of
     a finished ``run_corpus_pipeline(docs, ...)`` run — the dedup-rate
     audit every corpus build publishes. One scalar count per
-    materialized stage boundary unioned, then a lag window fills docs_in
-    from the previous row; all counts are exact BIGINTs, the stage_id is
-    the unique sort key."""
-    from pyspark.sql import Window
-
+    materialized stage boundary, unioned, folded into one row of five
+    counts and stacked back into one row per stage, each stage's docs_in
+    being the previous stage's docs_out — no window, so no
+    single-partition window warning. All counts are exact BIGINTs, the
+    stage_id is the unique sort key."""
     frames = (
         docs,
         res.gated,
@@ -261,19 +261,15 @@ def corpus_funnel(docs: DataFrame, res: CorpusResult) -> DataFrame:
         res.decontaminated,
     )
     counts = None
-    for i, (name, frame) in enumerate(zip(STAGES, frames)):
-        row = frame.agg(F.count(F.lit(1)).alias("docs_out")).select(
-            F.lit(i).cast("int").alias("stage_id"),
-            F.lit(name).alias("stage"),
-            F.col("docs_out"),
-        )
-        counts = row if counts is None else counts.unionByName(row)
-    w = Window.orderBy("stage_id")
-    return counts.select(
-        "stage_id",
-        "stage",
-        F.coalesce(F.lag("docs_out").over(w), F.col("docs_out")).alias(
-            "docs_in"
-        ),
-        "docs_out",
+    for i, frame in enumerate(frames):
+        n = frame.agg(F.count(F.lit(1)).alias("n")).select(F.lit(i).alias("i"), "n")
+        counts = n if counts is None else counts.unionByName(n)
+    counts = counts.agg(
+        *(F.max(F.when(F.col("i") == i, F.col("n"))).alias(f"n{i}") for i in range(len(frames)))
+    )
+    rows = ", ".join(
+        f"{i}, '{name}', n{max(i - 1, 0)}, n{i}" for i, name in enumerate(STAGES)
+    )
+    return counts.selectExpr(
+        f"stack({len(STAGES)}, {rows}) AS (stage_id, stage, docs_in, docs_out)"
     )

@@ -74,8 +74,9 @@ def order_price_rank_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition counts (total_col) — zero extra jobs and nothing
     # resolved at plan-build time: the whole query is one lazy plan.
     # Deriving it from the ranked frame instead re-executed the kernel's
-    # window subtree twice more (probe_floor showed data/duck 5.03
-    # before; 0.36 s of the 0.73 s wall was those re-passes), and a
+    # window subtree twice more (a floor decomposition over cached
+    # tables showed executor data time 5.03x the DuckDB wall before;
+    # 0.36 s of the 0.73 s wall was those re-passes), and a
     # separate o.count() job was one whole scheduling floor (~0.08 s).
     # rank by (cents, orderkey), not (price, orderkey): round(x*100) is
     # monotone in x, so the cents order equals the price order up to

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from epiteam_network_etl_functions_spark.plans.corpus_pipeline import (
@@ -94,7 +95,8 @@ def test_run_pipeline_and_export(spark, tmp_path):
     assert n_exported == 1
 
 
-def test_funnel_counts_monotone(spark):
+@pytest.fixture(scope="module")
+def funnel(spark):
     rows = (
         [(i, f"bench doc number {i} unique tail {i}") for i in range(3)]
         + [(20 + i, f"{GOOD} pad{i} pad{i} tail{i}") for i in range(4)]
@@ -102,12 +104,24 @@ def test_funnel_counts_monotone(spark):
     )
     docs = _docs(spark, [r for r in rows if r[0] >= 20])
     bench = _docs(spark, [r for r in rows if r[0] < 20])
-    fun = corpus_funnel(docs, run_corpus_pipeline(docs, bench, CFG))
-    out = sorted((r.stage_id, r.stage, r.docs_in, r.docs_out) for r in fun.collect())
+    return corpus_funnel(docs, run_corpus_pipeline(docs, bench, CFG))
+
+
+def test_funnel_counts_monotone(funnel):
+    out = sorted((r.stage_id, r.stage, r.docs_in, r.docs_out) for r in funnel.collect())
     assert [r[1] for r in out] == list(STAGES)
     assert out[0][2] == out[0][3] == 8  # raw
     for (_, _, di, do), (_, _, _, prev) in zip(out[1:], out[:-1]):
         assert di == prev and do <= di  # chained + monotone
+
+
+def test_funnel_plan_has_no_window(funnel):
+    """docs_in comes from the previous stage's count without a window: a
+    partitionless window would move the five rows to one partition and log
+    Spark's single-partition warning on every corpus run, burying the same
+    warning where it matters (pack_bins)."""
+    plan = funnel._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
 
 
 def test_funnel_oracle_constants_match_config():
