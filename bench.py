@@ -11,30 +11,22 @@ Heavier queries dominate; the set covers the flagship co-location join,
 the contact-matrix pipeline, the TPC-H shapes, and the dedup/similarity
 extensions as they land.
 
-Round-14 measurement fixes (OPTIMIZATION_r14.md "Methodology"; the pre-r14
-protocol and its numbers are kept there for comparison):
+Protocol rules, and why each holds:
 
-1. NO pre-timed-region caching of base tables. Through r13 the bench called
-   ``catalog.cache_tables`` before timing, so timed runs read hash-
-   partitioned in-memory columnar batches while the DuckDB side re-read
-   parquet per run. Every timed run now computes from the parquet inputs,
-   exactly like the oracle side.
-2. The DataFrame is REBUILT for each timed repetition and the session
-   cache is cleared first. Building once and re-counting let one class of
-   work leak out of the reported min-of-3: lazy ``localCheckpoint`` /
-   ``.cache()`` intermediates inside a query's plan materialize on run 1
-   and are silently reused by runs 2-3, so the min reported the warm
-   tail, not the query. A fresh build per repetition creates fresh
-   checkpoint RDDs and (with the cache cleared) fresh cache entries, so
-   every timed run executes the full pipeline from the parquet inputs.
-   The rebuild itself stays OUTSIDE the timed window: what it spends is
-   Python-side py4j expression construction (~1 ms per call on this VM,
-   0.1-0.7 s per query — measured in OPTIMIZATION_r14.md), which measures
-   the driver-language binding, not the engine; the guide's protocol
-   (§1.4) times the action. Queries that used to run *data* jobs at
-   build time were restructured so all their Spark jobs run inside the
-   timed action (see OPTIMIZATION_r14.md: tfidf_top_terms n_docs fold-in,
-   order_price_rank_deciles in-plan rank offsets).
+1. No base table is cached before the timed region. Every timed run
+   computes from the parquet inputs, exactly like the DuckDB side, which
+   re-reads parquet per run; cached columnar batches would time a
+   different (warm, pre-partitioned) input than the oracle's.
+2. Each timed repetition rebuilds the DataFrame after
+   ``spark.catalog.clearCache()``. A query whose plan holds lazy
+   ``localCheckpoint`` or ``.cache()`` intermediates materializes them on
+   its first count; re-counting one built DataFrame would let later
+   repetitions reuse them, and the min of three would report that warm
+   tail instead of the query.
+3. The rebuild stays outside the timed window. Building a DataFrame is
+   Python-side py4j expression construction, which measures the Python
+   binding, not the engine; every Spark job a query needs runs inside the
+   timed ``count()``.
 
 The one declared exception is ``colocation_pairs_bucketed``: its stated
 purpose is the steady-state exchange-free self-join over a presence table

@@ -54,6 +54,7 @@ from .plans.mobility import (
     daily_home_winners,
     extract_day,
     impute_neighbour_frequency_labels,
+    locate_homes,
     locate_pings,
     night_presence_scores,
     with_cells,
@@ -134,11 +135,9 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
     )
     scores = night_presence_scores(located, bucket_seconds=args.bucket_seconds)
     winners = daily_home_winners(scores)
-    homes = (
-        locate_pings(winners.withColumnRenamed("home_cell", "h3index_15"), dim)
-        .withColumn("home_ageb", F.coalesce(F.col("cve_geo"), F.lit(SENTINEL_AGEB_13)))
-        .select("caid", "home_ageb", "score", "confidence")
-    )
+    homes = locate_homes(
+        winners.withColumnRenamed("home_cell", "h3index_15"), dim, "h3index_15"
+    ).select("caid", "home_ageb", "score", "confidence")
     if args.impute_rounds > 0:
         comp = connected_components_star(interactions, a_col="a_caid", b_col="b_caid")
         # long-label form: no component has to fit in a row (the arrays

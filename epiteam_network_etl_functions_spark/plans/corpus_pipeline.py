@@ -178,7 +178,8 @@ def pack_bins(
 ) -> DataFrame:
     """Contiguous-fill sequence packing in id order (same kernel as the
     certified doc_pack_bins query): bin = floor(preceding-cumulative-tokens
-    / budget). Global window here; partition by shard for the 100 TB run."""
+    / budget). The running sum is one global window with no partition key,
+    so Spark moves every row into a single partition to compute it."""
     from pyspark.sql import Window
 
     n_tokens = F.size(tokens_col(text_col))

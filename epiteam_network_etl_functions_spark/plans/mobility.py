@@ -142,6 +142,21 @@ def locate_pings(
     return pings.join(dim, cell_col, "left")
 
 
+def locate_homes(
+    winners: DataFrame, cell_region_dim: DataFrame, cell_col: str
+) -> DataFrame:
+    """Home region of each winner row (IndexingHomeAgebs.py:66-132): the
+    winner's cell attributed through the (cell, cve_geo) dim by
+    locate_pings' broadcast left join, and a cell the dim does not map
+    takes the 13-zero sentinel. Returns the winner columns plus
+    ``home_ageb``."""
+    return (
+        locate_pings(winners, cell_region_dim, cell_col=cell_col)
+        .withColumn("home_ageb", F.coalesce(F.col("cve_geo"), F.lit(SENTINEL_AGEB_13)))
+        .drop("cve_geo")
+    )
+
+
 def fact_pings_base(
     pings: DataFrame,
     cell_region_dim: DataFrame,

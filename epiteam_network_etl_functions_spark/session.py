@@ -114,6 +114,8 @@ def get_session(app_name: str = "epiteam-network-etl-functions-spark") -> SparkS
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no [Stage N:>...] progress bars interleaved with the stderr logs
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     for k, v in _profile_conf().items():

@@ -39,6 +39,7 @@ from ..plans.mobility import (
     global_home_winner,
     impute_kring,
     impute_neighbour_frequency,
+    locate_homes,
     night_presence_scores,
     with_cells,
 )
@@ -130,30 +131,6 @@ def _dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dim_from_cells(cells)
 
 
-def _cve_geo_expr(cell: str = "cell") -> Column:
-    """The dim row for ``cell`` as a pure expression: cve_geo where the dim
-    has a row (hash_bucket(cell,'geo',10) < 7), NULL where it does not.
-
-    The synthetic dim is BY CONSTRUCTION a deterministic function of the
-    cell id (``_dim_from_cells`` derives every column from ``cell``), so a
-    LEFT JOIN against a dim whose domain covers the probe side's cells is
-    exactly this expression — no distinct-cells aggregate, no broadcast
-    build, no join (guide §2.4: the shuffle/join exists only to re-attach
-    a value the row can compute itself). Callers that model a REAL
-    external dimension (pings_fact_base's J7 dedup-joinback, the imputer
-    k-ring probes) keep the genuine join; this shortcut is only valid
-    where the dim is the synthetic derivation itself."""
-    return F.when(
-        F.expr(f"{_hb_spark(cell, 'geo', 10)} < 7"),
-        F.expr(
-            "concat('09', "
-            f"lpad(cast({_hb_spark(cell, 'mun', 900)} as string), 3, '0'), "
-            f"lpad(cast({_hb_spark(cell, 'loc', 9000)} as string), 4, '0'), "
-            f"lpad(cast({_hb_spark(cell, 'blk', 9000)} as string), 4, '0'))"
-        ),
-    )
-
-
 # ---- shared DuckDB CTEs -----------------------------------------------------
 
 # MATERIALIZED: the md5 derivation is referenced 2-4x per oracle (self-
@@ -202,19 +179,29 @@ winners AS MATERIALIZED (
 
 
 def _visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(caid, cell, n) visit counts — the shared upstream of the all-time
-    winner AND the realized-cell dim (its cell set is exactly the realized
-    cells, so dim derivation can branch off this aggregate and let
-    ReuseExchange serve both from one md5-derivation scan)."""
+    """(caid, cell, n) visit counts, the upstream of the all-time winner."""
     p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
     return p.groupBy("caid", "cell").agg(F.count(F.lit(1)).alias("n"))
 
 
 def _home_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(caid, cell) all-time winner per device, by (n DESC, cell ASC). The
+    winners also feed _homes' dim branch: _dim_from_cells over their
+    distinct cells."""
     allc = _visits(spark, sf_dir)
     return top1_per_key(allc, ["caid"], [F.desc("n"), F.asc("cell")]).select(
         "caid", "cell"
     )
+
+
+def _homes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-time winner cell -> region, sentinel-filled (the imputer's and
+    the interactions table's home_ageb input, IndexingHomeAgebs.py:112-132
+    shape). The dim is derived for the winners' cells only: a cell no
+    winner holds never matches the left join, whatever the dim."""
+    winners = _home_winners(spark, sf_dir)
+    dim = _dim_from_cells(winners.select("cell").distinct())
+    return locate_homes(winners, dim, "cell").select("caid", "home_ageb")
 
 
 # ---- queries ----------------------------------------------------------------
@@ -347,31 +334,18 @@ def pings_global_home(spark: SparkSession, sf_dir: str) -> DataFrame:
     three-exchange plan (agg keys, per-day window, global window) becomes
     two exchanges of aggregated data. Measured 0.62 s vs 0.76 s at sf0.1;
     at 100 TB the alternative single raw-pings shuffle on caid would move
-    ~10x more bytes, so this is also the scale shape."""
+    ~10x more bytes, so this is also the scale shape. The repository's
+    regions come from locate_homes over a dim derived for the daily
+    winners' cells only (a broadcast of their distinct cells' codes)."""
     p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
     daily = p.groupBy(
         "caid", F.to_date("cdmx_datetime").alias("day"), "cell"
     ).agg(F.count(F.lit(1)).alias("score"))
     daily = daily.repartition("caid")
     dwin = top1_per_key(daily, ["caid", "day"], [F.desc("score"), F.asc("cell")])
-    # The repo LEFT-joins dim on the WINNERS' cells. r14 restricted the dim
-    # domain to dwin's cells (result-identical: non-winner cells never
-    # match); r15 takes that to its closed form: the synthetic dim is a
-    # pure function of the cell, so the left join + coalesce IS
-    # when(hb(cell)<7, cve_geo(cell), SENTINEL) computed on the winner row
-    # itself (_cve_geo_expr). This deletes the dim branch outright — the
-    # r14 plan re-read the caid exchange, re-sorted, re-ran the winner
-    # window, deduped cells (one more exchange) and broadcast the result,
-    # all to re-attach a value each row can compute (guide §2.4). With a
-    # real external dim the r14 broadcast-join shape applies instead
-    # (pings_fact_base keeps it).
-    repo = dwin.select(
-        "caid",
-        F.coalesce(_cve_geo_expr("cell"), F.lit(SENTINEL_AGEB_13)).alias(
-            "home_ageb"
-        ),
-        "score",
-    )
+    repo = locate_homes(
+        dwin, _dim_from_cells(dwin.select("cell").distinct()), "cell"
+    ).select("caid", "home_ageb", "score")
     return global_home_winner(repo)
 
 
@@ -476,14 +450,7 @@ def pings_impute_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash partition of the device population; the oracle is the one-round
     closed form (round 1 fills every fillable device, later rounds are
     no-ops, so the loop's fixpoint equals the single-round result)."""
-    homes = (
-        _home_winners(spark, sf_dir)
-        .join(_dim(spark, sf_dir), "cell", "left")
-        .select(
-            "caid",
-            F.coalesce("cve_geo", F.lit(SENTINEL_AGEB_13)).alias("home_ageb"),
-        )
-    )
+    homes = _homes(spark, sf_dir)
     members = _pings(spark, sf_dir).select("caid").distinct()
     components = (
         members.withColumn("cb", F.expr(f"{_hb_spark('caid', 'comp', 30)}"))
@@ -533,33 +500,6 @@ def pings_device_rg(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
     return device_rg(
         p, id_col="caid", cell_col="cell", distance_expr=_sq_grid_distance
-    )
-
-
-def _homes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-time winner cell -> region, sentinel-filled (the interactions
-    table's home_ageb input, IndexingHomeAgebs.py:112-132 shape).
-
-    r14 derived the dim from the winners' own cells (result-identical
-    under the left join) so ReuseExchange served both branches from one
-    visits aggregate; r15 closes the remaining gap: the synthetic dim is
-    a pure function of the cell, so the left join + coalesce collapses to
-    ``when(hb(cell)<7, cve_geo(cell), SENTINEL)`` on the winner row
-    (_cve_geo_expr). That deletes the whole dim branch — the r14 plan
-    re-read the winner exchange, re-sorted, re-ran the winner window,
-    deduped cells through one more exchange and broadcast the result,
-    purely to re-attach a value each winner row can compute (guide §2.4).
-    The r14 branch-reconvergence isnotnull(caid) filter went with it (its
-    only purpose was canonicalizing the two branches; the downstream
-    inner joins still push the same filter into the one remaining
-    subtree). With a real external dim the broadcast-join shape applies
-    instead (pings_fact_base keeps it)."""
-    winners = _home_winners(spark, sf_dir)
-    return winners.select(
-        "caid",
-        F.coalesce(_cve_geo_expr("cell"), F.lit(SENTINEL_AGEB_13)).alias(
-            "home_ageb"
-        ),
     )
 
 

@@ -18,6 +18,8 @@ PARITY_SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("epiteam-etl-spark-tests")
+    # get_session keeps Spark's progress bars out of stderr logs
+    assert s.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
     # STATE_STORE_PROVIDER=rocksdb reruns every streaming test against
     # the RocksDB state store (bundled with Spark 4; verified working —
     # tests/test_round13.py locks targeted parity, this knob sweeps the

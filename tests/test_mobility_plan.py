@@ -21,6 +21,7 @@ from epiteam_network_etl_functions_spark.plans.mobility import (
     global_home_winner,
     impute_kring,
     impute_neighbour_frequency,
+    locate_homes,
     locate_pings,
     night_presence_scores,
     with_cells,
@@ -313,6 +314,88 @@ def test_locate_pings_broadcast_join(spark):
     )
     out = {r["caid"]: r["cve_geo"] for r in locate_pings(pings, dim).collect()}
     assert out == {"A": "R9", "B": None}
+
+
+def test_locate_homes_sentinel_and_passthrough(spark):
+    """locate_homes: a winner cell the dim does not map takes the 13-zero
+    sentinel, dim cells no winner holds change nothing, and the winner's
+    other columns pass through."""
+    winners = spark.createDataFrame(
+        [
+            Row(caid="A", home_cell="g12:x:y", score=5, confidence="high"),
+            Row(caid="B", home_cell="g12:zz:zz", score=2, confidence="low"),
+        ]
+    )
+    want = {
+        ("A", "g12:x:y", 5, "high", "0901200010010"),
+        ("B", "g12:zz:zz", 2, "low", SENTINEL_AGEB_13),
+    }
+    for cells in (["g12:x:y"], ["g12:x:y", "g12:other", "g12:third"]):
+        dim = cells_to_regions_dim(
+            spark.createDataFrame([Row(cells=cells, cve_geo="0901200010010")])
+        )
+        out = locate_homes(winners, dim, "home_cell")
+        assert sorted(out.columns) == sorted(winners.columns + ["home_ageb"])
+        got = {
+            (r["caid"], r["home_cell"], r["score"], r["confidence"], r["home_ageb"])
+            for r in out.collect()
+        }
+        assert got == want
+
+
+def test_home_queries_join_the_given_dim(spark, monkeypatch):
+    """pings_global_home and pings_interactions take their homes from the
+    dim _dim_from_cells returns, as their oracles LEFT JOIN theirs. With a
+    dim the test-data generator does not make (codes reversed, a tenth of
+    the cells dropped) Spark and DuckDB still agree, and both differ from
+    the generator-dim answer: a shortcut that recomputes the generator's
+    dim instead of joining fails here. sf0.01, because sf0.001 has no
+    co-located pair."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from epiteam_network_etl_functions_spark.workload import pings as wp
+    from epiteam_network_etl_functions_spark.workload.extended import _hash_bucket_sql
+    from tests.conftest import PARITY_SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(PARITY_SF_DIR), "sf0.01")
+    generated = wp._dim_from_cells
+
+    def permuted(cells):
+        return generated(cells).where(
+            F.expr(f"{wp._hb_spark('cell', 'drop', 10)} <> 0")
+        ).selectExpr("cell", "reverse(cve_geo) AS cve_geo")
+
+    monkeypatch.setattr(wp, "_dim_from_cells", permuted)
+    dim_cte = wp._DIM_CTE.strip()
+    permuted_cte = dim_cte.replace("dim AS MATERIALIZED", "gen_dim AS MATERIALIZED") + f""",
+dim AS MATERIALIZED (
+    SELECT cell, reverse(cve_geo) AS cve_geo FROM gen_dim
+    WHERE {_hash_bucket_sql('cell', 10, 'drop')} <> 0
+)"""
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+
+    def rows(columns, records):
+        order = sorted(range(len(columns)), key=lambda i: columns[i])
+        return sorted(tuple(str(r[i]) for i in order) for r in records)
+
+    def duck(sql):
+        cur = con.execute(sql)
+        return rows([c[0] for c in cur.description], cur.fetchall())
+
+    oracles, registry = entrymod.oracle_sql(), entrymod.queries()
+    for name in ("pings_global_home", "pings_interactions"):
+        assert dim_cte in oracles[name]
+        generator_answer = duck(oracles[name])
+        want = duck(oracles[name].replace(dim_cte, permuted_cte))
+        sdf = registry[name](spark, sf_dir)
+        got = rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+        assert got == want, name
+        assert want and want != generator_answer, name
+    con.close()
 
 
 def test_fact_pings_base_joinback(spark):

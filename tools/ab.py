@@ -4,6 +4,9 @@ protocol: one command for the ratio, floor and shuffle tables.
 
     python tools/ab.py [--sf-dir DIR] [--queries a,b] [--tag TAG] [--out-dir DIR]
 
+``--queries`` takes any registered query names; the default set is
+``bench.BENCH_QUERIES``.
+
 Spark side, exactly as bench.py times it: the small profile (AQE off, 4
 shuffle partitions) for inputs under 1 GiB, one warm pass over the set,
 then per query three reps of ``clearCache()`` + rebuild + timed ``count()``
@@ -135,14 +138,17 @@ def main() -> int:
 
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
-    ap.add_argument("--queries", default="", help="comma-separated subset of BENCH_QUERIES")
+    ap.add_argument("--queries", default="",
+                    help="comma-separated registered queries (default: BENCH_QUERIES)")
     ap.add_argument("--tag", default="local")
     ap.add_argument("--out-dir", default=os.path.join(ROOT, "artifacts", "ab"))
     args = ap.parse_args()
+    import __spark_entry__ as entrymod
+
     names = [q for q in args.queries.split(",") if q] or list(BENCH_QUERIES)
-    unknown = sorted(set(names) - set(BENCH_QUERIES))
+    unknown = sorted(set(names) - set(entrymod.queries()))
     if unknown:
-        ap.error(f"not in bench.BENCH_QUERIES: {', '.join(unknown)}")
+        ap.error(f"not registered: {', '.join(unknown)}")
 
     # bench.py's profile rule
     if _dir_bytes(args.sf_dir) < 1 << 30:
@@ -152,8 +158,6 @@ def main() -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
     from epiteam_network_etl_functions_spark.session import default_parallelism, get_session
-
-    import __spark_entry__ as entrymod
 
     cores = default_parallelism()
     load_before, ticks_before, t_run = os.getloadavg(), cpu_ticks(), time.time()
