@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .constants import SENTINEL_AGEB_13
 from .operators.colocation import colocation_edges
-from .operators.components import connected_components_star
+from .operators.components import connected_components
 from .operators.contacts import group_sizes
 from .operators.graphs import (
     sample_nodes,
@@ -139,7 +139,7 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
         winners.withColumnRenamed("home_cell", "h3index_15"), dim, "h3index_15"
     ).select("caid", "home_ageb", "score", "confidence")
     if args.impute_rounds > 0:
-        comp = connected_components_star(interactions, a_col="a_caid", b_col="b_caid")
+        comp = connected_components(interactions, a_col="a_caid", b_col="b_caid")
         # long-label form: no component has to fit in a row (the arrays
         # form is kept for the reference-parity workload query)
         homes = impute_neighbour_frequency_labels(

@@ -119,28 +119,3 @@ def colocation_pairs_bucketed(
         .distinct()
     )
 
-
-def colocation_edges_bucketed(
-    spark: SparkSession,
-    table: str,
-    id_col: str = "caid",
-    cell_col: str = "h3index_15",
-    tw_col: str = "tw",
-    weight_col: str = "n_windows",
-) -> DataFrame:
-    """Undirected weighted edges from a bucketed presence table (the
-    colocation_edges kernel minus its input exchange)."""
-    p = spark.table(table)
-    a, b = p.alias("a"), p.alias("b")
-    ai, bi = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-    return (
-        a.join(b, on=[cell_col, tw_col])
-        .where(ai != bi)
-        .select(
-            F.least(ai, bi).alias(f"a_{id_col}"),
-            F.greatest(ai, bi).alias(f"b_{id_col}"),
-            F.col(tw_col),
-        )
-        .groupBy(f"a_{id_col}", f"b_{id_col}")
-        .agg(F.countDistinct(tw_col).alias(weight_col))
-    )

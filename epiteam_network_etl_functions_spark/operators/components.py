@@ -2,13 +2,12 @@
 
 The reference consumes `connected_component` arrays for neighbour-frequency
 imputation (home_ageb_imputers.py:120-206) but builds them with networkx on
-one machine. This kernel computes them on the cluster: iterative min-label
-propagation (each node adopts the smallest id reachable in one hop;
-converges in O(diameter) rounds; the large-star/small-star optimization is
-the known upgrade for pathological diameters).
-
-Each round works on the edge list alone — no driver-side graph. State is
-localCheckpointed every round and the previous round unpersisted.
+one machine. ``connected_components`` computes them on the cluster with
+large-star/small-star rounds: O(log n) rounds on any topology, each round
+working on the edge list alone (no driver-side graph), with state
+localCheckpointed every round and the previous round unpersisted. The
+mobility chain's imputation, the corpus stage's fuzzy dedup and the text
+queries' near-duplicate clusters all run this one kernel.
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 def undirected_adjacency(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Canonical (src, dst) adjacency with both directions, deduplicated —
-    shared by components and the distributed SEIR."""
+    the distributed SEIR's neighbour lists."""
     fwd = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     rev = edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     return fwd.unionByName(rev).distinct()
@@ -28,87 +27,21 @@ def connected_components(
     edges: DataFrame,
     a_col: str = "a_id",
     b_col: str = "b_id",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """(node_id, component_id) with component_id = min node id in the
-    component. Nodes appearing only in `edges`; isolated nodes absent from
-    the edge list keep themselves as their own component by definition —
-    union them in from the node table if needed.
-
-    Min-label propagation converges in O(diameter) rounds; if the cap is
-    hit first the labels would be silently wrong, so that raises instead —
-    raise ``max_iterations`` (or switch to ``connected_components_star``,
-    the O(log n)-round variant) for extreme-diameter graphs.
-
-    Each round references the previous labels twice (neighbour join +
-    changed check), so logical plans would double per round; state is
-    localCheckpointed every round — cache() alone leaves an exponentially
-    growing plan tree that OOMs the driver after ~20 rounds."""
-    adj = undirected_adjacency(edges, a_col, b_col).localCheckpoint()
-
-    labels = (
-        adj.select(F.col("src").alias("node_id"))
-        .distinct()
-        .withColumn("component_id", F.col("node_id"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iterations):
-        # each node: min(own label, min neighbour label)
-        neighbour_min = (
-            adj.join(
-                labels.withColumnRenamed("node_id", "dst").withColumnRenamed(
-                    "component_id", "__nl"
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("__nl").alias("__min_nl"))
-            .withColumnRenamed("src", "node_id")
-        )
-        new_labels = (
-            labels.join(neighbour_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(
-                    F.col("component_id"),
-                    F.coalesce(F.col("__min_nl"), F.col("component_id")),
-                ).alias("component_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            labels.withColumnRenamed("component_id", "__old")
-            .join(new_labels, "node_id")
-            .where(F.col("__old") != F.col("component_id"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    adj.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds "
-            "(graph diameter exceeds the cap); raise max_iterations"
-        )
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
     max_iterations: int = 40,
 ) -> DataFrame:
-    """(node_id, component_id) via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log n) rounds on ANY topology, vs min-label propagation's
-    O(diameter) (``connected_components``): a 10⁵-node path graph converges
-    in ~17 rounds here where min-label needs 10⁵.
+    """(node_id, component_id) with component_id = the min node id of the
+    component, via alternating large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
+    rounds on ANY topology: a 10⁵-node path graph converges in ~17 rounds
+    here, where min-label propagation would need 10⁵.
+
+    Edge contract: self-loops and edges with a NULL endpoint are dropped,
+    and duplicate or reversed edges collapse to one undirected edge. So
+    the output has one row per node that appears in at least one edge
+    between two distinct non-NULL ids; a node seen only in a self-loop, or
+    isolated nodes absent from the edge list, get no row — union them in
+    from the node table if they must label themselves. Node ids must be of
+    an ordered type (numbers, strings, dates, timestamps).
 
     Each round is two star operations, each one window minimum over the
     current edge set partitioned by ``u``:
@@ -123,11 +56,13 @@ def connected_components_star(
     (count + bit_xor of xxhash64(u, v) — xor, not sum, so ANSI-mode
     overflow is impossible), observed during the round's own
     localCheckpoint action, so it costs no job of its own. State is
-    localCheckpointed per round so plans stay O(1) across iterations.
+    localCheckpointed per round so plans stay O(1) across iterations, and
+    the returned labels read only that checkpoint — callers may release
+    any cache that backed ``edges`` as soon as this returns.
 
     Replaces the driver-side networkx components the reference consumes for
     neighbour-frequency imputation (home_ageb_imputers.py:120-206) at any
-    scale; same output contract as ``connected_components``.
+    scale.
     """
     comparable = {"int", "bigint", "smallint", "tinyint", "double", "float",
                   "string", "date", "timestamp", "decimal"}
@@ -179,7 +114,7 @@ def connected_components_star(
         prev = cur
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
+            f"connected_components did not converge in {max_iterations} "
             "rounds — pathological input (expected O(log n) rounds)"
         )
     # Fixpoint edges are (member -> component min); the mins label

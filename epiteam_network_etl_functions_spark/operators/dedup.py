@@ -1,5 +1,5 @@
-"""Deduplication kernels: exact, MinHash+LSH near-dup (beyond-reference
-surface required by BASELINE.json).
+"""Deduplication kernels: exact, MinHash+LSH near-dup, PPJoin near-dup
+clusters (beyond-reference surface required by BASELINE.json).
 
 Design for 100 TB:
 - Exact dedup is a hash-groupBy on a digest — one shuffle of (digest, id).
@@ -17,6 +17,8 @@ Design for 100 TB:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .components import connected_components
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -220,3 +222,25 @@ def prefix_filter_candidates(
         .select("a_id", "b_id")
         .distinct()
     )
+
+
+def near_dup_components(
+    shingled: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Near-duplicate clusters: (node_id, component_id) for every document
+    in at least one verified pair, labelled with its cluster's min id.
+    PPJoin candidates (exact, zero false negatives) -> Jaccard verify at
+    ``threshold`` -> connected components.
+
+    The shingles feed the candidate ranking and both sides of the verify
+    join, and the verify references the candidates three times, so both
+    are cached for the chain. The component kernel localCheckpoints its
+    state eagerly and its labels read only that checkpoint, so both caches
+    are released before this returns."""
+    shingled = shingled.cache()
+    cands = prefix_filter_candidates(shingled, id_col, threshold=threshold).cache()
+    pairs = jaccard_verify(cands, shingled, id_col, threshold=threshold)
+    comp = connected_components(pairs.select("a_id", "b_id"))
+    shingled.unpersist()
+    cands.unpersist()
+    return comp

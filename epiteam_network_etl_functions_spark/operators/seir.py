@@ -10,7 +10,7 @@ inside its task. Here:
 - `seir_discrete` is a deterministic-under-seed discrete-time SEIR over an
   edge list (numpy; documented divergence from Gillespie — event times are
   step-quantized).
-- `run_seir_sweep` fans (seed -> trajectory) out via the JVM scheduler
+- `run_gillespie_sweep` fans (seed -> trajectory) out via the JVM scheduler
   (parallelize over seeds), the reference's mp.Pool(10) (SimulationManager
   .py:371) without the process plumbing.
 - `infected_by_block` / `trajectory_stats` are the csv_infected.py:88-121
@@ -222,26 +222,6 @@ def run_gillespie_sweep(
 
     rdd = sc.parallelize(seeds, len(seeds)).flatMap(run)
     return spark.createDataFrame(rdd, "seed int, t double, S int, E int, I int, R int")
-
-
-def run_seir_sweep(
-    spark: SparkSession,
-    n_nodes: int,
-    edges: list[tuple[int, int]],
-    seeds: list[int],
-    **params,
-) -> DataFrame:
-    """Fan one SEIR run per seed across the cluster (the reference's
-    mp.Pool seed sweep, seeds 0-99). Edges ship once via broadcast."""
-    sc = spark.sparkContext
-    edges_bc = sc.broadcast(edges)
-
-    def run(seed: int):
-        rows = seir_discrete(n_nodes, edges_bc.value, seed=seed, **params)
-        return [(seed, *r) for r in rows]
-
-    rdd = sc.parallelize(seeds, len(seeds)).flatMap(run)
-    return spark.createDataFrame(rdd, ["seed", "t", "S", "E", "I", "R"])
 
 
 def trajectory_stats(trajectories: DataFrame) -> DataFrame:

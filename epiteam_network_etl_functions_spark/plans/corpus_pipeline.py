@@ -19,9 +19,9 @@ end-to-end against a DuckDB oracle.
 
 Scale notes (the 100 TB shape): the quality gates are map-only and fuse
 with the scan; exact dedup is one digest groupBy; the fuzzy stage is the
-prefix-filtered PPJoin (never all-pairs) plus O(diameter) component
-rounds over near-dup cliques; decontamination broadcasts only the
-benchmark shingle set (eval suites are tiny by construction); packing is
+prefix-filtered PPJoin (never all-pairs) plus O(log n) large-/small-star
+component rounds over the verified pairs; decontamination broadcasts only
+the benchmark shingle set (eval suites are tiny by construction); packing is
 per-shard-parallel (see doc_pack_bins); the export is a size-uniform
 round-robin shard write. No stage holds data-sized driver state.
 """
@@ -32,8 +32,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.components import connected_components
-from ..operators.dedup import jaccard_verify, prefix_filter_candidates
+from ..operators.dedup import near_dup_components
 from ..operators.text import (
     bigram_repetition_ratio,
     char_entropy_nats,
@@ -125,21 +124,16 @@ def dedup_fuzzy(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Transitive-closure fuzzy dedup: PPJoin candidate pairs (exact, zero
-    false negatives) -> Jaccard verify -> connected components -> keep the
-    min-id doc per component; docs in no near-dup pair keep themselves.
-    Same kernel chain as the certified fuzzy_dedup_components query."""
-    shingled = explode_shingles(docs, id_col, text_col, k=cfg.shingle_k).cache()
-    cands = prefix_filter_candidates(
-        shingled, id_col, threshold=cfg.jaccard_threshold
-    ).cache()
-    pairs = jaccard_verify(
-        cands, shingled, id_col, threshold=cfg.jaccard_threshold
-    ).select("a_id", "b_id")
-    comp = connected_components(pairs, "a_id", "b_id")
-    # connected_components localCheckpoints eagerly; release the inputs.
-    shingled.unpersist()
-    cands.unpersist()
+    """Transitive-closure fuzzy dedup: near-dup clusters (PPJoin pairs ->
+    Jaccard verify -> connected components, operators/dedup
+    .near_dup_components) -> keep the min-id doc per component; docs in no
+    near-dup pair keep themselves. The same chain as the certified
+    fuzzy_dedup_components query."""
+    comp = near_dup_components(
+        explode_shingles(docs, id_col, text_col, k=cfg.shingle_k),
+        id_col,
+        cfg.jaccard_threshold,
+    )
     losers = comp.where(F.col("node_id") != F.col("component_id")).select(
         F.col("node_id").alias(id_col)
     )

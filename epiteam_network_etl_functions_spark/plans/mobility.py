@@ -289,7 +289,7 @@ def impute_neighbour_frequency_labels(
     rounds: int = 6,
 ) -> DataFrame:
     """The 100 TB form of neighbour-frequency imputation: consumes
-    connected_components_star's long (node_id, component_id) labels
+    connected_components' long (node_id, component_id) labels
     directly — no component ever has to fit in a row, so the
     components_as_arrays ceiling is off the product path entirely. The
     component id (the component's min node id) is deterministic, and it is

@@ -16,6 +16,7 @@ from ..operators.dedup import (
     lsh_bands,
     lsh_candidate_pairs,
     minhash_signatures,
+    near_dup_components,
 )
 from ..operators.text import (
     classify_by_lexicons,
@@ -226,10 +227,9 @@ def _materialize_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
     unpersisting silently de-caches a plan that still needs the cache, and
     the multi-branch subtree replays once per branch at collect time (the
     bug class this helper retires — two calibration queries shipped that
-    way). Callers whose kernel already checkpoints internally
-    (connected_components) can pass its output here too; the extra
-    checkpoint of an already-materialized frame is cheap and keeps one
-    discipline."""
+    way). dedup_keepers passes connected_components' labels, which already
+    read only the kernel's own checkpoint; the extra checkpoint of an
+    already-materialized frame is cheap and keeps one discipline."""
     out = result.localCheckpoint()
     for frame in caches:
         frame.unpersist()
@@ -237,28 +237,12 @@ def _materialize_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
 
 
 def _ppjoin_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared PPJoin -> connected-components chain: cached distinct
-    shingles (the verify joins reference them from multiple branches),
-    cached prefix-filter candidates, exact Jaccard verification at
-    JACCARD_THRESHOLD, then distributed min-label components. The
-    component kernel localCheckpoints its labels eagerly, so by the time
-    this returns the caches are safely released — callers
-    (fuzzy_dedup_components, near_dup_cluster_sizes,
+    """Near-dup cluster labels over the documents' word-3-gram shingles at
+    JACCARD_THRESHOLD — the corpus stage's chain
+    (operators/dedup.near_dup_components), caches already released;
+    callers (fuzzy_dedup_components, near_dup_cluster_sizes,
     near_dup_cluster_source_mix) only shape the label frame."""
-    from ..operators.components import connected_components
-    from ..operators.dedup import jaccard_verify, prefix_filter_candidates
-
-    shingled = _shingled(spark, sf_dir).cache()
-    cands = prefix_filter_candidates(
-        shingled, "doc_id", threshold=JACCARD_THRESHOLD
-    ).cache()
-    pairs = jaccard_verify(
-        cands, shingled, "doc_id", threshold=JACCARD_THRESHOLD
-    ).select("a_id", "b_id")
-    comp = connected_components(pairs, "a_id", "b_id")
-    shingled.unpersist()
-    cands.unpersist()
-    return comp
+    return near_dup_components(_shingled(spark, sf_dir), "doc_id", JACCARD_THRESHOLD)
 
 
 def _near_dup_pipeline(
@@ -344,14 +328,14 @@ def dedup_keepers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle closes the pair graph with a recursive reachability
     CTE — a genuinely different component algorithm, so the differential
     checks the clustering semantics, not the implementation."""
-    from ..operators.components import connected_components_star
+    from ..operators.components import connected_components
 
     pairs, cached = _near_dup_pipeline(spark, sf_dir)
     # the component kernel localCheckpoints its edge state, so its labels
     # no longer read the upstream caches; the shared choreography releases
     # them, which would otherwise leak one copy per invocation
     labels = _materialize_release(
-        connected_components_star(pairs, a_col="a_id", b_col="b_id"), *cached
+        connected_components(pairs, a_col="a_id", b_col="b_id"), *cached
     )
     return labels.select(
         F.col("node_id").alias("doc_id"),
@@ -886,15 +870,15 @@ def fuzzy_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus builders run): near-duplicate PAIRS are only edges — the unit
     of removal is the CONNECTED COMPONENT (A~B, B~C must collapse to one
     keeper even when A!~C). Pairs come from the exact PPJoin path
-    (zero false negatives), components from distributed min-label
-    propagation (operators/components.py — O(diameter) rounds of
-    neighbour-min joins, localCheckpointed state), keeper = min doc_id
-    per component, exactly the reference's connected_component-array
+    (zero false negatives), components from the distributed large-/
+    small-star kernel (operators/components.py — O(log n) rounds of
+    window minimums, localCheckpointed state), keeper = min doc_id per
+    component, exactly the reference's connected_component-array
     semantics (NetworkBuilder.py:229-247) re-expressed for scale. The
     oracle builds the same closure with a recursive CTE, so the iterative
-    Spark kernel is differentially checked end-to-end. Near-dup graphs
-    are short-diameter by construction (components are tight similarity
-    cliques), so rounds stay ~log-diameter at any corpus size."""
+    Spark kernel is differentially checked end-to-end. The corpus stage's
+    fuzzy dedup runs the same chain (operators/dedup
+    .near_dup_components)."""
     comp = _ppjoin_component_labels(spark, sf_dir)
     return comp.select(
         F.col("node_id").alias("doc_id"),
@@ -1265,8 +1249,8 @@ def lsh_ppjoin_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     One-row report; both pipelines share one cached shingle frame (the
     shingle subtree feeds ~6 branches), the verified pair sets are
     localCheckpointed — eagerly materialized, lineage cut — so the cache
-    can be released before returning (the connected_components
-    discipline: no session-pinned storage outlives the call), and every
+    can be released before returning (as near_dup_components does: no
+    session-pinned storage outlives the call), and every
     count is a scalar agg crossJoined back (no driver-side counts)."""
     from ..operators.dedup import prefix_filter_candidates
 
@@ -1694,8 +1678,8 @@ def doc_quality_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PPJoin-pairs -> recursive-reachability connected components, shared by
 # every cluster-level oracle (chains after _DSH_CTE under WITH RECURSIVE;
 # `comp` maps each clustered doc_id `id` to its component label `m` = the
-# component's min doc_id — the same deterministic label the Spark
-# connected_components operator converges to).
+# component's min doc_id — the label operators/dedup.near_dup_components
+# returns on the Spark side, by a different closure algorithm).
 _CC_COMP_CTES = f"""
     sizes AS (SELECT doc_id, count(*) AS nd FROM dsh GROUP BY doc_id),
     dfq AS (SELECT shingle, count(*) AS df FROM dsh GROUP BY shingle),

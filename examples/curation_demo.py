@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from epiteam_network_etl_functions_spark import catalog
 from epiteam_network_etl_functions_spark.operators.components import (
-    connected_components_star,
+    connected_components,
 )
 from epiteam_network_etl_functions_spark.operators.dedup import (
     exact_dedup_groups,
@@ -62,7 +62,7 @@ def main() -> None:
     sigs = minhash_signatures(sh, "doc_id", n_hashes=16)
     cands = lsh_candidate_pairs(lsh_bands(sigs, "doc_id", 16, 4), "doc_id").cache()
     pairs = jaccard_verify(cands, sh, "doc_id", threshold=0.3)
-    labels = connected_components_star(pairs, a_col="a_id", b_col="b_id")
+    labels = connected_components(pairs, a_col="a_id", b_col="b_id")
     drop = labels.where(F.col("node_id") != F.col("component_id")).select(
         F.col("node_id").alias("doc_id")
     )

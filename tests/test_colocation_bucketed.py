@@ -7,11 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from epiteam_network_etl_functions_spark.operators.colocation import (
-    colocation_edges,
     colocation_pairs,
 )
 from epiteam_network_etl_functions_spark.operators.colocation_bucketed import (
-    colocation_edges_bucketed,
     colocation_pairs_bucketed,
     write_presence_bucketed,
 )
@@ -41,13 +39,6 @@ def bucketed(spark, pings):
 def test_pairs_match_inflight_kernel(spark, pings, bucketed):
     want = {tuple(r) for r in colocation_pairs(pings).collect()}
     got = {tuple(r) for r in colocation_pairs_bucketed(spark, bucketed).collect()}
-    assert want
-    assert got == want
-
-
-def test_edges_match_inflight_kernel(spark, pings, bucketed):
-    want = {tuple(r) for r in colocation_edges(pings).collect()}
-    got = {tuple(r) for r in colocation_edges_bucketed(spark, bucketed).collect()}
     assert want
     assert got == want
 

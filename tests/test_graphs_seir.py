@@ -13,7 +13,7 @@ from epiteam_network_etl_functions_spark.operators.graphs import (
 )
 from epiteam_network_etl_functions_spark.operators.seir import (
     infected_by_block,
-    run_seir_sweep,
+    run_gillespie_sweep,
     seir_discrete,
     trajectory_stats,
 )
@@ -67,7 +67,7 @@ def test_seir_conservation_and_monotonicity():
 
 def test_seir_sweep_and_stats(spark):
     edges = [(i, (i + 1) % 30) for i in range(30)]
-    traj = run_seir_sweep(spark, 30, edges, seeds=[0, 1, 2], beta=0.4, t_max=50)
+    traj = run_gillespie_sweep(spark, 30, edges, seeds=[0, 1, 2], beta=0.4, t_max=50)
     stats = trajectory_stats(traj)
     assert stats.where(F.col("n_runs") > 3).count() == 0
     t0 = stats.where(F.col("t") == 0).collect()[0]

@@ -170,7 +170,7 @@ def test_neighbour_frequency_labels_matches_arrays(spark):
     components the star kernel closes over a chain of edges."""
     from epiteam_network_etl_functions_spark.operators.components import (
         components_as_arrays,
-        connected_components_star,
+        connected_components,
     )
     from epiteam_network_etl_functions_spark.plans.mobility import (
         impute_neighbour_frequency_labels,
@@ -193,7 +193,7 @@ def test_neighbour_frequency_labels_matches_arrays(spark):
             Row(a_id="C", b_id="D"), Row(a_id="F", b_id="G"),
         ]
     )
-    labels = connected_components_star(edges)
+    labels = connected_components(edges)
     via_labels = {
         r["caid"]: r["home_ageb"]
         for r in impute_neighbour_frequency_labels(homes, labels, rounds=3).collect()
