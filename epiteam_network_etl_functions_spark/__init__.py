@@ -10,7 +10,7 @@ Layout:
     catalog     testdata table loading (explicit names, schema helpers)
     constants   sentinel values and shared literals
     operators/  pure DataFrame-in -> DataFrame-out kernels
-    functions/  the only Python-row code (vectorized pandas UDFs), gated deps
+    functions/  cell grid (h3 pandas UDFs, else square-grid JVM forms), UDTFs
     sources/    IO helpers (partitioned parquet, csv, custom data sources)
     streaming/  Structured Streaming variants of the batch windows
     plans/      composed multi-stage pipelines (home-location, contact matrix)

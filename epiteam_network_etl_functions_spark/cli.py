@@ -67,17 +67,19 @@ def _load_inputs(
     spark: SparkSession, args: argparse.Namespace
 ) -> tuple[DataFrame, DataFrame, object]:
     """(pings, cell->region dim, cell expression) from --pings/--dim or
-    --sf-dir demo derivation."""
+    --sf-dir demo derivation. Real inputs take hexgrid's cell (None); the
+    demo dim is keyed by the pings workload's res-9 square cells."""
     if args.pings:
         if not args.dim:
             sys.exit("--pings requires --dim (a (cell, cve_geo) parquet)")
         return spark.read.parquet(args.pings), spark.read.parquet(args.dim), None
-    from .workload.pings import _cell_expr, _dim, _pings
+    from .functions.squaregrid import cell_sql
+    from .workload.pings import RES, _dim, _pings
 
     return (
         _pings(spark, args.sf_dir),
         _dim(spark, args.sf_dir),
-        _cell_expr(),
+        F.expr(cell_sql(RES)),
     )
 
 

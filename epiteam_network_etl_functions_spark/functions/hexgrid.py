@@ -1,15 +1,17 @@
-"""Hex/cell grid functions (reference F1-F4: h3.geo_to_h3, h3_to_geo,
+"""Cell-grid functions F1-F4 (reference h3.geo_to_h3, h3_to_geo,
 h3_distance, k_ring — ntl_transforms.py:64-65, home_ageb_imputers.py:36-51,
 RadiusOfGyrationHandler.py:139-140).
 
-Implemented as Arrow-vectorized pandas UDFs — the reference's row-wise
-`.apply(axis=1)` is the slow path these replace. When the `h3` package is
-present it is used; otherwise a deterministic square-grid fallback with the
-same API keeps every pipeline testable in this container (cell ids are
-strings, k_ring returns arrays, distances are integer grid hops).
+``cell_of`` / ``cell_centroid`` / ``grid_distance`` / ``k_ring`` are the
+pipelines' grid, selected once at the bottom of this module:
 
-These UDFs are codegen barriers (SURVEY.md §4): pipelines isolate them in a
-single projection per stage so Catalyst fuses everything around them.
+- with the ``h3`` package installed, the ``hex_*`` family below: real H3
+  in Arrow-vectorized pandas UDFs (the reference's row-wise
+  ``.apply(axis=1)`` is the slow path they replace). They are codegen
+  barriers (SURVEY.md §4), so pipelines isolate them in one projection;
+- without it, the square fallback grid of functions/squaregrid.py: JVM
+  Column expressions with the same API (string ids, arrays from k_ring,
+  integer hop distances) that run no Python at all.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .squaregrid import as_column
 
 try:  # pragma: no cover - h3 not in this container
     import h3 as _h3
@@ -33,101 +37,19 @@ except Exception:
 
     HAVE_H3 = False
 
-# Fallback grid: cell width in degrees per "resolution" (coarse -> fine).
-_RES_DEG = {r: 10.0 / (2**r) for r in range(16)}
-
-
-def _fallback_cell(lat: float, lon: float, res: int) -> str:
-    size = _RES_DEG[res]
-    return f"g{res}:{math.floor(lat / size)}:{math.floor(lon / size)}"
-
-
-def _parse(cell: str) -> tuple[int, int, int]:
-    r, i, j = cell.split(":")
-    return int(r[1:]), int(i), int(j)
-
 
 def _is_bad(*vals) -> bool:
-    """NULL arrives as NaN/None in the Arrow batch; emit NULL out, never
-    crash the stage on one bad row."""
-    for v in vals:
-        if v is None:
-            return True
-        if isinstance(v, float) and math.isnan(v):
-            return True
-    return False
-
-
-@F.pandas_udf(T.StringType())
-def _cell_of_udf(lat: pd.Series, lon: pd.Series, res: pd.Series) -> pd.Series:
-    out = []
-    for a, o, r in zip(lat, lon, res):
-        if _is_bad(a, o, r):
-            out.append(None)
-        elif HAVE_H3:
-            out.append(_h3.latlng_to_cell(a, o, int(r)))
-        else:
-            out.append(_fallback_cell(a, o, int(r)))
-    return pd.Series(out, dtype="object")
-
-
-@F.pandas_udf(T.StructType([T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]))
-def _centroid_udf(cell: pd.Series) -> pd.DataFrame:
-    pts = []
-    for c in cell:
-        if _is_bad(c):
-            pts.append((None, None))
-        elif HAVE_H3:
-            pts.append(_h3.cell_to_latlng(c))
-        else:
-            r, i, j = _parse(c)
-            size = _RES_DEG[r]
-            pts.append(((i + 0.5) * size, (j + 0.5) * size))
-    return pd.DataFrame({"lat": [p[0] for p in pts], "lon": [p[1] for p in pts]})
-
-
-@F.pandas_udf(T.LongType())
-def _distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        if _is_bad(x, y):
-            out.append(None)
-        elif HAVE_H3:
-            out.append(int(_h3.grid_distance(x, y)))
-        else:
-            _, xi, xj = _parse(x)
-            _, yi, yj = _parse(y)
-            out.append(max(abs(xi - yi), abs(xj - yj)))
-    return pd.Series(out, dtype="object")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _k_ring_udf(cell: pd.Series, k: pd.Series) -> pd.Series:
-    out = []
-    for c, kk in zip(cell, k):
-        if _is_bad(c, kk):
-            out.append(None)
-        elif HAVE_H3:
-            out.append(list(_h3.grid_disk(c, int(kk))))
-        else:
-            r, i, j = _parse(c)
-            kk = int(kk)
-            out.append(
-                [
-                    f"g{r}:{i + di}:{j + dj}"
-                    for di in range(-kk, kk + 1)
-                    for dj in range(-kk, kk + 1)
-                ]
-            )
-    return pd.Series(out)
+    """NULL arrives as NaN/None in the Arrow batch, and +-inf has no cell;
+    emit NULL out, never crash the stage on one bad row."""
+    return any(v is None or (isinstance(v, float) and not math.isfinite(v)) for v in vals)
 
 
 # ---- hexagon-semantics UDF family ------------------------------------------
-# Same four operations routed through _h3 unconditionally (real h3 when
-# installed, h3lite otherwise): hex rings (1 + 3k(k+1) cells), hex
-# distance, hex centroids. The legacy family below keeps the square-grid
-# default when h3 is absent, because every registered oracle mirrors that
-# grid in SQL; new hex-grid pipelines should use these.
+# The four operations routed through _h3 in every environment (real h3
+# when installed, h3lite otherwise): hex rings (1 + 3k(k+1) cells), hex
+# distance, hex centroids. With h3 installed they are the pipelines'
+# grid; without it the pipelines keep the square grid, which every
+# registered oracle mirrors in SQL, and hex pipelines call these directly.
 
 
 @F.pandas_udf(T.StringType())
@@ -172,45 +94,26 @@ def _hex_k_ring_udf(cell: pd.Series, k: pd.Series) -> pd.Series:
 
 def hex_cell_of(lat, lon, res: int):
     """point -> hex cell id (F1 under hex semantics; h3 or h3lite)."""
-    return _hex_cell_of_udf(F.col(lat) if isinstance(lat, str) else lat,
-                            F.col(lon) if isinstance(lon, str) else lon,
-                            F.lit(res))
+    return _hex_cell_of_udf(as_column(lat), as_column(lon), F.lit(res))
 
 
 def hex_cell_centroid(cell):
     """hex cell -> struct(lat, lon) centroid (F2 under hex semantics)."""
-    return _hex_centroid_udf(F.col(cell) if isinstance(cell, str) else cell)
+    return _hex_centroid_udf(as_column(cell))
 
 
 def hex_grid_distance(a, b):
     """hex grid hops between cells (F3 under hex semantics)."""
-    return _hex_distance_udf(F.col(a) if isinstance(a, str) else a,
-                             F.col(b) if isinstance(b, str) else b)
+    return _hex_distance_udf(as_column(a), as_column(b))
 
 
 def hex_k_ring(cell, k: int):
     """hex cell -> 1+3k(k+1) cells within k hops (F4 under hex semantics)."""
-    return _hex_k_ring_udf(F.col(cell) if isinstance(cell, str) else cell, F.lit(k))
+    return _hex_k_ring_udf(as_column(cell), F.lit(k))
 
 
-def cell_of(lat, lon, res: int):
-    """point -> cell id string (F1: h3.geo_to_h3)."""
-    return _cell_of_udf(F.col(lat) if isinstance(lat, str) else lat,
-                        F.col(lon) if isinstance(lon, str) else lon,
-                        F.lit(res))
-
-
-def cell_centroid(cell):
-    """cell -> struct(lat, lon) centroid (F2: h3.h3_to_geo)."""
-    return _centroid_udf(F.col(cell) if isinstance(cell, str) else cell)
-
-
-def grid_distance(a, b):
-    """integer grid distance between cells (F3: h3.h3_distance)."""
-    return _distance_udf(F.col(a) if isinstance(a, str) else a,
-                         F.col(b) if isinstance(b, str) else b)
-
-
-def k_ring(cell, k: int):
-    """cell -> array of cells within k hops, incl. itself (F4: h3.k_ring)."""
-    return _k_ring_udf(F.col(cell) if isinstance(cell, str) else cell, F.lit(k))
+if HAVE_H3:  # pragma: no cover - h3 is optional
+    cell_of, cell_centroid = hex_cell_of, hex_cell_centroid
+    grid_distance, k_ring = hex_grid_distance, hex_k_ring
+else:
+    from .squaregrid import cell_centroid, cell_of, grid_distance, k_ring  # noqa: F401

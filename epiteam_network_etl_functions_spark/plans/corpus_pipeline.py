@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..operators.dedup import near_dup_components
 from ..operators.text import (
@@ -227,12 +227,16 @@ def run_corpus_pipeline(
     gated = gate_quality(docs, cfg, id_col, text_col).localCheckpoint()
     exact = dedup_exact(gated, id_col, text_col).localCheckpoint()
     fuzzy = dedup_fuzzy(exact, cfg, id_col, text_col).localCheckpoint()
-    clean = decontaminate(fuzzy, bench, cfg, id_col, text_col).localCheckpoint()
+    clean = decontaminate(fuzzy, bench, cfg, id_col, text_col)
+    # the shard size needs the survivor count: observed on the checkpoint
+    # job, so the export's own count is the only count of ``clean``
+    seen = Observation("corpus_clean")
+    clean = clean.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint()
     packed = pack_bins(clean, cfg, id_col, text_col)
     if out_dir is not None:
         from ..sources.io import write_jsonl_shards
 
-        n = clean.count()
+        n = seen.get["n"]
         write_jsonl_shards(
             clean, out_dir, records_per_shard=max(1, -(-n // shards))
         )

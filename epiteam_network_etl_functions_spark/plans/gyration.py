@@ -10,8 +10,10 @@ Reference semantics kept exactly (SURVEY.md §7 'ragged semantics'):
   (RadiusOfGyrationH3.ipynb cell 33) — divergence documented there;
 - municipal rollup is AVG + STDDEV over device rgs (A5).
 
-The grid-distance pandas UDF (F3) is the only Python step; it runs once
-per (device, cell) pair — the dedup-before-expensive-op idiom again.
+The grid distance (F3) runs once per (device, cell) pair — the
+dedup-before-expensive-op idiom again. With h3 absent it is the square
+grid's JVM expression and the plan runs no Python; with h3 installed it
+is the h3 pandas UDF.
 """
 
 from __future__ import annotations
@@ -36,7 +38,12 @@ def device_rg(
     inside the single subtree — one (id, cell) agg exchange with map-side
     combine, one id exchange for the window, and the final per-id agg
     rides the window's partitioning. Measured 0.85 s -> 0.25 s at sf0.1,
-    byte-identical output."""
+    byte-identical output.
+
+    ``distance_expr((Column, Column) -> Column)`` pins the grid: the
+    square-grid oracle queries pass squaregrid.grid_distance, so they keep
+    Chebyshev hops when real h3 is installed; default None uses hexgrid's
+    grid_distance."""
     from pyspark.sql import Window
 
     visits = pings.groupBy(id_col, cell_col).agg(F.count(F.lit(1)).alias("n"))
@@ -45,12 +52,6 @@ def device_rg(
         .orderBy(F.desc("n"), F.asc(cell_col))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    # distance_expr ((Column, Column) -> Column) replaces the
-    # grid-distance pandas UDF with a pure JVM expression when the
-    # caller's cell scheme admits one (the square grid's Chebyshev hops
-    # do; real H3 ids do not) — removing the plan's only ArrowEvalPython
-    # node lets the visits->window->distance->agg pipeline fuse into
-    # whole-stage codegen with no Python workers at all.
     dist = distance_expr if distance_expr is not None else grid_distance
     with_d = visits.withColumn(
         "__center", F.first(cell_col).over(w)

@@ -42,13 +42,15 @@ def with_cells(
     out_col: str = "h3index_15",
     cell_expr: Column | None = None,
 ) -> DataFrame:
-    """Attach the hex cell (F1) in one isolated projection — the pandas UDF
-    is a codegen barrier, so it runs exactly once per stage.
+    """Attach the cell (F1) in one isolated projection. The default is
+    hexgrid's ``cell_of``: the square grid's JVM expression when h3 is
+    absent, else the h3 pandas UDF, a codegen barrier that runs exactly
+    once per stage this way.
 
-    ``cell_expr`` swaps the grid system: pass a JVM Column (e.g. the
-    portable square-grid expression the oracle queries use) and the stage
-    stays inside whole-stage codegen with engine-portable semantics;
-    default None uses the h3-or-fallback pandas UDF."""
+    ``cell_expr`` pins the grid instead: the oracle-mirrored queries pass
+    the square grid's SQL text (functions/squaregrid.cell_sql), so they
+    stay on the grid their DuckDB oracles compute even when real h3 is
+    installed."""
     col = cell_expr if cell_expr is not None else cell_of(lat_col, lon_col, res)
     return pings.withColumn(out_col, col)
 
@@ -218,8 +220,9 @@ def impute_kring(
     region, widening k each round; loop-with-shrinking-input, cached, early
     exit when nothing is missing (SURVEY.md §4 'iterative loop').
 
-    ``ring_fn(cell_col, k) -> array Column`` swaps the grid system (see
-    with_cells); default None uses the h3-or-fallback k_ring pandas UDF."""
+    ``ring_fn(cell_col, k) -> array Column`` pins the grid (see
+    with_cells): the square-grid oracle queries pass squaregrid.k_ring and
+    the hex variant h3lite's disk; default None uses hexgrid's k_ring."""
     dim = cell_region_dim
     cur = homes.join(
         F.broadcast(dim.withColumnRenamed("cell", cell_col)), cell_col, "left"

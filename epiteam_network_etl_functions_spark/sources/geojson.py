@@ -96,24 +96,19 @@ def polygon_bbox_cells(geometry_json: str, res: int) -> Sequence[str]:
     """Bounding-box candidate cells for a polygon on the fallback grid —
     an over-approximation; :func:`polygon_cover_cells` refines it. Kept
     public as the candidate generator and for cheap coarse prefilters."""
-    import math
-
-    from ..functions.hexgrid import _RES_DEG
+    from ..functions.squaregrid import cell_id, parse_cell, py_cell_of
 
     geom = json.loads(geometry_json)
     pts = _walk_points(geom.get("coordinates", []))
     if not pts:
         return []
-    size = _RES_DEG[res]
     lats = [p[0] for p in pts]
     lons = [p[1] for p in pts]
-    cells = set()
-    i0, i1 = math.floor(min(lats) / size), math.floor(max(lats) / size)
-    j0, j1 = math.floor(min(lons) / size), math.floor(max(lons) / size)
-    for i in range(i0, i1 + 1):
-        for j in range(j0, j1 + 1):
-            cells.add(f"g{res}:{i}:{j}")
-    return sorted(cells)
+    _, i0, j0 = parse_cell(py_cell_of(min(lats), min(lons), res))
+    _, i1, j1 = parse_cell(py_cell_of(max(lats), max(lons), res))
+    return sorted(
+        cell_id(res, i, j) for i in range(i0, i1 + 1) for j in range(j0, j1 + 1)
+    )
 
 
 def polygon_cover_cells(geometry_json: str, res: int) -> Sequence[str]:
@@ -125,15 +120,11 @@ def polygon_cover_cells(geometry_json: str, res: int) -> Sequence[str]:
     (FactPingsBaseGenerator.py:74) at cell granularity. Driver-side by
     design: catalogs are a few hundred polygons and the candidate set is
     bbox-bounded."""
-    from ..functions.hexgrid import _RES_DEG
+    from ..functions.squaregrid import py_cell_centroid
 
     geom = json.loads(geometry_json)
-    size = _RES_DEG[res]
-    out = []
-    for cell in polygon_bbox_cells(geometry_json, res):
-        _, i, j = cell.split(":")
-        clat = (int(i) + 0.5) * size
-        clon = (int(j) + 0.5) * size
-        if point_in_geometry(clat, clon, geom):
-            out.append(cell)
-    return out
+    return [
+        cell
+        for cell in polygon_bbox_cells(geometry_json, res)
+        if point_in_geometry(*py_cell_centroid(cell), geom)
+    ]

@@ -886,14 +886,15 @@ def _pings_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pings_prefix_sql() -> str:
-    from .pings import _PINGS_CTE, _cell_sql
+    from ..functions.squaregrid import cell_sql
+    from .pings import _PINGS_CTE, RES
 
     return (
         "WITH "
         + _PINGS_CTE.strip().removeprefix("WITH").strip()
         + f""",
     pos AS MATERIALIZED (
-        SELECT caid, cdmx_datetime, min({_cell_sql()}) AS cell
+        SELECT caid, cdmx_datetime, min({cell_sql(RES)}) AS cell
         FROM pings GROUP BY caid, cdmx_datetime
     )"""
     )

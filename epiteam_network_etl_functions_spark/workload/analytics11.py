@@ -497,15 +497,16 @@ def home_work_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram — the commute-separation product the reference's home
     pipeline stops one step short of. Anchors are the W4 winner kernel
     per (device, regime) (count DESC, cell ASC — total order); the
-    grid distance parses the square-cell ids to integer coordinates
-    (hexgrid F3's metric on the fallback lattice); devices need both
-    anchors (inner join at device cardinality). Distances cap at 10 for
-    a bounded histogram."""
+    grid distance is the square grid's Chebyshev hops (F3,
+    functions/squaregrid.grid_distance); devices need both anchors
+    (inner join at device cardinality). Distances cap at 10 for a
+    bounded histogram."""
+    from ..functions.squaregrid import cell_sql, grid_distance
     from ..operators.winners import top1_per_key
-    from .pings import _cell_expr, _pings
+    from .pings import RES, _pings
     from ..plans.mobility import with_cells
 
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     hr = F.hour("cdmx_datetime")
     night = p.where((hr >= 22) | (hr < 6))
     work = p.where((hr >= 9) & (hr < 17))
@@ -520,12 +521,7 @@ def home_work_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         return won.select("caid", F.col("cell").alias(name))
 
     j = anchor(night, "home_cell").join(anchor(work, "work_cell"), "caid")
-    hx = F.split("home_cell", ":")
-    wx = F.split("work_cell", ":")
-    cheb = F.greatest(
-        F.abs(hx[1].cast("long") - wx[1].cast("long")),
-        F.abs(hx[2].cast("long") - wx[2].cast("long")),
-    )
+    cheb = grid_distance("home_cell", "work_cell")
     return (
         j.select(F.least(cheb, F.lit(10)).cast("long").alias("grid_distance"))
         .groupBy("grid_distance")
@@ -535,12 +531,13 @@ def home_work_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _install_home_work_oracle() -> None:
     from . import ORACLES
-    from .pings import _PINGS_CTE, _cell_sql
+    from ..functions.squaregrid import cell_sql
+    from .pings import _PINGS_CTE, RES
 
     ORACLES["home_work_separation"] = f"""
     WITH {_PINGS_CTE.strip().removeprefix('WITH').strip()},
     pc AS (
-        SELECT caid, {_cell_sql()} AS cell,
+        SELECT caid, {cell_sql(RES)} AS cell,
                EXTRACT(hour FROM cdmx_datetime) AS hr
         FROM pings
     ),
@@ -879,12 +876,13 @@ def od_gravity_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _install_od_gravity_oracle() -> None:
     from . import ORACLES
-    from .pings import _PINGS_CTE, _cell_sql
+    from ..functions.squaregrid import cell_sql
+    from .pings import _PINGS_CTE, RES
 
     ORACLES["od_gravity_fit"] = f"""
     WITH {_PINGS_CTE.strip().removeprefix('WITH').strip()},
     pos AS MATERIALIZED (
-        SELECT caid, cdmx_datetime, min({_cell_sql()}) AS cell
+        SELECT caid, cdmx_datetime, min({cell_sql(RES)}) AS cell
         FROM pings GROUP BY caid, cdmx_datetime
     ),
     seq AS (

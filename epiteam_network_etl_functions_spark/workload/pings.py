@@ -8,10 +8,11 @@ engine-portable md5 hash-bucket (operators/sampling.hash_bucket — already
 oracle-proven by `dataset_splits`), and the real plan kernels run on it
 with a DuckDB oracle reproducing the same derivation.
 
-Grid system: the kernels take a pluggable cell expression / ring function
-(production = the h3 pandas UDF, here = the portable square grid as a pure
-JVM expression `g{res}:{floor(lat/size)}:{floor(lon/size)}`), so these
-oracles hold whether or not the h3 package is installed.
+Grid system: the kernels take a pluggable cell expression, ring function
+and distance (default: hexgrid's, which is real H3 when the h3 package is
+installed). These queries pin the square grid of functions/squaregrid.py,
+whose `cell_sql` text both engines parse, so the oracles hold whether or
+not h3 is installed.
 
 Reference parity targets:
 - pings_fact_base       -> FactPingsBaseGenerator.py:140-217 (J7 dedup-joinback)
@@ -29,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .. import catalog
 from ..constants import SENTINEL_AGEB_13
+from ..functions.squaregrid import cell_sql, grid_distance, k_ring
 from ..operators.winners import top1_per_key
 from ..operators.colocation import colocation_pairs
 from ..operators.timebucket import with_time_bucket
@@ -48,7 +50,6 @@ from . import query
 from .extended import _hash_bucket_sql
 
 RES = 9
-SIZE = 10.0 / (1 << RES)  # 0.01953125 — exact binary fraction, both engines
 
 
 def _hb_spark(expr: str, salt: str, buckets: int) -> str:
@@ -57,38 +58,6 @@ def _hb_spark(expr: str, salt: str, buckets: int) -> str:
         f"(cast(conv(substring(md5(cast(concat('{salt}:', cast({expr} as string))"
         f" as binary)), 1, 12), 16, 10) as bigint) % {buckets})"
     )
-
-
-def _cell_sql(lat: str = "latitude", lon: str = "longitude") -> str:
-    """Square-grid cell id — identical text parses in Spark SQL and DuckDB.
-    The divisor is cast to double explicitly: a bare decimal literal is
-    DECIMAL in Spark SQL but DOUBLE in DuckDB, and the arithmetic must be
-    the same IEEE754 ops on both engines."""
-    size = f"cast({SIZE!r} as double)"
-    return (
-        f"concat('g{RES}:', cast(floor({lat} / {size}) as bigint), "
-        f"':', cast(floor({lon} / {size}) as bigint))"
-    )
-
-
-def _cell_expr() -> Column:
-    return F.expr(_cell_sql())
-
-
-def _sq_grid_distance(a: Column, b: Column) -> Column:
-    """Chebyshev grid hops between two square-grid ids 'gR:i:j' as a pure
-    JVM expression — value-identical to the hexgrid._distance_udf fallback
-    (max(|di|, |dj|) as long; NULL in -> NULL out), minus its
-    ArrowEvalPython node: passing this to device_rg keeps the RG pipeline
-    entirely inside whole-stage codegen (guide §4.1)."""
-    ai, bi = F.split(a, ":"), F.split(b, ":")
-    di = F.abs(
-        F.element_at(ai, 2).cast("long") - F.element_at(bi, 2).cast("long")
-    )
-    dj = F.abs(
-        F.element_at(ai, 3).cast("long") - F.element_at(bi, 3).cast("long")
-    )
-    return F.greatest(di, dj)
 
 
 # ---- derived pings + region dim (Spark side) --------------------------------
@@ -127,7 +96,7 @@ def _dim_from_cells(cells: DataFrame) -> DataFrame:
 def _dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cell -> 13-char cve_geo) for ~70% of realized cells; the unmapped 30%
     exercise the sentinel and imputation paths."""
-    cells = _pings(spark, sf_dir).selectExpr(f"{_cell_sql()} AS cell").distinct()
+    cells = _pings(spark, sf_dir).selectExpr(f"{cell_sql(RES)} AS cell").distinct()
     return _dim_from_cells(cells)
 
 
@@ -151,7 +120,7 @@ pings AS MATERIALIZED (
 """
 
 _DIM_CTE = f"""
-cells AS MATERIALIZED (SELECT DISTINCT {_cell_sql()} AS cell FROM pings),
+cells AS MATERIALIZED (SELECT DISTINCT {cell_sql(RES)} AS cell FROM pings),
 dim AS MATERIALIZED (
     SELECT cell,
            concat('09',
@@ -166,7 +135,7 @@ dim AS MATERIALIZED (
 
 # all-time winner cell per device (input homes table for the imputers)
 _WINNERS_CTE = f"""
-pc AS MATERIALIZED (SELECT caid, cdmx_datetime, {_cell_sql()} AS cell FROM pings),
+pc AS MATERIALIZED (SELECT caid, cdmx_datetime, {cell_sql(RES)} AS cell FROM pings),
 allc AS (SELECT caid, cell, count(*) AS n FROM pc GROUP BY caid, cell),
 winners AS MATERIALIZED (
     SELECT caid, cell FROM (
@@ -180,7 +149,7 @@ winners AS MATERIALIZED (
 
 def _visits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(caid, cell, n) visit counts, the upstream of the all-time winner."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     return p.groupBy("caid", "cell").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -217,11 +186,11 @@ def _homes(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(p.latitude, 6) AS lat6,
            round(p.longitude, 6) AS lon6,
            CAST(p.horizontal_accuracy AS BIGINT) AS acc,
-           {_cell_sql('p.latitude', 'p.longitude')} AS cell,
+           {cell_sql(RES, 'p.latitude', 'p.longitude')} AS cell,
            d.cve_geo,
            substr(d.cve_geo, 1, 5) AS cve_mun
     FROM pings p
-    LEFT JOIN dim d ON d.cell = {_cell_sql('p.latitude', 'p.longitude')}
+    LEFT JOIN dim d ON d.cell = {cell_sql(RES, 'p.latitude', 'p.longitude')}
     """,
 )
 def pings_fact_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +209,7 @@ def pings_fact_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pings(spark, sf_dir),
         _dim(spark, sf_dir),
         res=RES,
-        cell_expr=_cell_expr(),
+        cell_expr=F.expr(cell_sql(RES)),
     )
     return out.selectExpr(
         "caid",
@@ -259,7 +228,7 @@ def pings_fact_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     night AS (
-        SELECT caid, cdmx_datetime, {_cell_sql()} AS cell
+        SELECT caid, cdmx_datetime, {cell_sql(RES)} AS cell
         FROM pings WHERE hour(cdmx_datetime) >= 22 OR hour(cdmx_datetime) < 6
     ),
     org AS (SELECT min(epoch_us(cdmx_datetime)) AS o FROM night),
@@ -287,7 +256,7 @@ def pings_daily_homes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """night_presence_scores + daily_home_winners: distinct night buckets per
     (device, cell), argmax cell, confidence vs the global mean score
     (HomeAgebGenerator.py:107-180)."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     scores = night_presence_scores(p, cell_col="cell")
     return daily_home_winners(scores, cell_col="cell")
 
@@ -298,7 +267,7 @@ def pings_daily_homes(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_PINGS_CTE.strip()},
     {_DIM_CTE.strip()},
     pc AS (
-        SELECT caid, CAST(cdmx_datetime AS DATE) AS day, {_cell_sql()} AS cell
+        SELECT caid, CAST(cdmx_datetime AS DATE) AS day, {cell_sql(RES)} AS cell
         FROM pings
     ),
     daily AS (SELECT caid, day, cell, count(*) AS score FROM pc GROUP BY caid, day, cell),
@@ -337,7 +306,7 @@ def pings_global_home(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10x more bytes, so this is also the scale shape. The repository's
     regions come from locate_homes over a dim derived for the daily
     winners' cells only (a broadcast of their distinct cells' codes)."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     daily = p.groupBy(
         "caid", F.to_date("cdmx_datetime").alias("day"), "cell"
     ).agg(F.count(F.lit(1)).alias("score"))
@@ -347,19 +316,6 @@ def pings_global_home(spark: SparkSession, sf_dir: str) -> DataFrame:
         dwin, _dim_from_cells(dwin.select("cell").distinct()), "cell"
     ).select("caid", "home_ageb", "score")
     return global_home_winner(repo)
-
-
-def _ring_fn(cell_col: str, k: int) -> Column:
-    """Portable square-grid k-ring: all cells within Chebyshev distance k,
-    as one parsed JVM array expression (matches hexgrid's fallback ring)."""
-    i = f"cast(split_part({cell_col}, ':', 2) as bigint)"
-    j = f"cast(split_part({cell_col}, ':', 3) as bigint)"
-    items = ", ".join(
-        f"concat('g{RES}:', cast({i} + {di} as string), ':', cast({j} + {dj} as string))"
-        for di in range(-k, k + 1)
-        for dj in range(-k, k + 1)
-    )
-    return F.expr(f"array({items})")
 
 
 @query(
@@ -403,7 +359,7 @@ def pings_impute_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dim(spark, sf_dir),
         cell_col="home_cell",
         max_k=5,
-        ring_fn=_ring_fn,
+        ring_fn=k_ring,
     )
     return out.select("caid", "home_cell", "cve_geo")
 
@@ -465,7 +421,7 @@ def pings_impute_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pings_device_rg",
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
-    pc AS (SELECT caid, {_cell_sql()} AS cell FROM pings),
+    pc AS (SELECT caid, {cell_sql(RES)} AS cell FROM pings),
     visits AS (SELECT caid, cell, count(*) AS n FROM pc GROUP BY caid, cell),
     center AS (
         SELECT caid, cell AS c FROM (
@@ -493,13 +449,13 @@ def pings_device_rg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """plans/gyration.device_rg over derived pings: visit-weighted RG in
     grid hops from the most-visited cell, squared-diff per the handler
     (RadiusOfGyrationHandler.py:134-279; SURVEY §7 squared-vs-abs decision
-    documented in plans/gyration.py). The grid-distance pandas UDF runs on
-    the square grid (Chebyshev hops), which the oracle reproduces in closed
-    form; every addend is an integer-valued double, so the float sums are
-    exact on both engines."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    documented in plans/gyration.py). The grid distance is the square
+    grid's Chebyshev hops (squaregrid.grid_distance, a JVM expression),
+    which the oracle reproduces in closed form; every addend is an
+    integer-valued double, so the float sums are exact on both engines."""
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     return device_rg(
-        p, id_col="caid", cell_col="cell", distance_expr=_sq_grid_distance
+        p, id_col="caid", cell_col="cell", distance_expr=grid_distance
     )
 
 
@@ -515,7 +471,7 @@ def pings_device_rg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     org AS (SELECT min(epoch_us(cdmx_datetime)) AS o FROM pings),
     pb AS (
-        SELECT caid, {_cell_sql()} AS cell,
+        SELECT caid, {cell_sql(RES)} AS cell,
                (epoch_us(cdmx_datetime) - (SELECT o FROM org)) // 600000000 AS tw
         FROM pings
     )
@@ -536,7 +492,7 @@ def pings_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     home_ageb is functionally dependent on caid, so attaching homes after
     the pair dedup is equivalent to the reference's pre-join attach — and
     keeps the wide shuffle on the narrow (id, cell, tw) presence."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     b = with_time_bucket(p, "cdmx_datetime", 600)
     pairs = colocation_pairs(b, id_col="caid", cell_col="cell", tw_col="tw")
     homes = _homes(spark, sf_dir)
@@ -764,7 +720,7 @@ def night_owl_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_PINGS_CTE.strip()},
     pc AS (
         SELECT caid, CAST(cdmx_datetime AS DATE) AS day,
-               {_cell_sql()} AS cell
+               {cell_sql(RES)} AS cell
         FROM pings
     ),
     daily AS (
@@ -793,7 +749,7 @@ def pings_home_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     IndexingHomeAgebs.py:66-89). Rides the same daily-winner kernel as
     pings_global_home (one aggregate + one caid-clustered window), then a
     per-device distinct count; all integers, caid is the unique key."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     daily = p.groupBy(
         "caid", F.to_date("cdmx_datetime").alias("day"), "cell"
     ).agg(F.count(F.lit(1)).alias("score"))
@@ -810,7 +766,7 @@ def pings_home_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     "device_rg_percentiles",
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
-    pc AS (SELECT caid, {_cell_sql()} AS cell FROM pings),
+    pc AS (SELECT caid, {cell_sql(RES)} AS cell FROM pings),
     visits AS (SELECT caid, cell, count(*) AS n FROM pc GROUP BY caid, cell),
     center AS (
         SELECT caid, cell AS c FROM (
@@ -847,9 +803,9 @@ def device_rg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles — interpolation runs over the ROUNDED rg values, which
     both engines hold bit-identically, so the quantile arithmetic is the
     same IEEE ops; a one-row scalar rollup of a per-device aggregate."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     rg = device_rg(
-        p, id_col="caid", cell_col="cell", distance_expr=_sq_grid_distance
+        p, id_col="caid", cell_col="cell", distance_expr=grid_distance
     ).select("caid", "rg")
     return rg.agg(
         F.count(F.lit(1)).alias("n_devices"),
@@ -870,7 +826,7 @@ def _pos_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse key (caid, cdmx_datetime) is unique per ping row in this
     derivation (measured sf0.1: 100000 rows -> 100000 groups), so the
     map-side partial aggregate the repartition forgoes reduced nothing."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     return (
         p.repartition(F.col("caid"))
         .groupBy("caid", "cdmx_datetime")
@@ -883,7 +839,7 @@ def _pos_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pc AS (
-        SELECT caid, cdmx_datetime, {_cell_sql()} AS cell FROM pings
+        SELECT caid, cdmx_datetime, {cell_sql(RES)} AS cell FROM pings
     ),
     pos AS (
         SELECT caid, cdmx_datetime, min(cell) AS cell
@@ -946,7 +902,7 @@ def device_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pc AS (
-        SELECT caid, cdmx_datetime, {_cell_sql()} AS cell FROM pings
+        SELECT caid, cdmx_datetime, {cell_sql(RES)} AS cell FROM pings
     ),
     pos AS (
         SELECT caid, cdmx_datetime, min(cell) AS cell
@@ -1026,7 +982,7 @@ def cell_dwell_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pc AS (
-        SELECT caid, {_cell_sql()} AS cell,
+        SELECT caid, {cell_sql(RES)} AS cell,
                hour(cdmx_datetime) AS h
         FROM pings
     ),
@@ -1077,7 +1033,7 @@ def commute_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregate reduced nothing."""
     from ..operators.winners import top1_per_key
 
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     p = p.withColumn("h", F.hour("cdmx_datetime")).repartition(F.col("caid"))
 
     def winner(filtered: DataFrame, out: str) -> DataFrame:
@@ -1106,7 +1062,7 @@ def commute_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     daily AS (
-        SELECT {_cell_sql()} AS cell,
+        SELECT {cell_sql(RES)} AS cell,
                CAST(cdmx_datetime AS DATE) AS day,
                count(DISTINCT caid) AS pop
         FROM pings
@@ -1137,7 +1093,7 @@ def cell_occupancy_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED cv with a cell tie-break. Plan: one (cell, day) distinct
     aggregate, one cell-keyed rollup, TakeOrderedAndProject — two
     exchanges, both on combined rows."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     daily = p.groupBy(
         "cell", F.to_date("cdmx_datetime").alias("day")
     ).agg(F.countDistinct("caid").alias("pop"))
@@ -1161,7 +1117,7 @@ def cell_occupancy_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pc AS (
-        SELECT caid, cdmx_datetime, {_cell_sql()} AS cell FROM pings
+        SELECT caid, cdmx_datetime, {cell_sql(RES)} AS cell FROM pings
     ),
     pos AS (
         SELECT caid, cdmx_datetime, min(cell) AS cell
@@ -1250,7 +1206,7 @@ def _register_mobility_contact_corr() -> None:
     ORACLES["mobility_contact_correlation"] = f"""
     WITH {_PINGS_CTE.strip()},
     {_EDGES_CTE.strip().lstrip()},
-    pc AS (SELECT caid, {_cell_sql()} AS cell FROM pings),
+    pc AS (SELECT caid, {cell_sql(RES)} AS cell FROM pings),
     visits AS (SELECT caid, cell, count(*) AS n FROM pc GROUP BY caid, cell),
     center AS (
         SELECT caid, cell AS c FROM (
@@ -1327,9 +1283,9 @@ def mobility_contact_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphstats import degrees
 
     dec = "decimal(38,0)"
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     rg = device_rg(
-        p, id_col="caid", cell_col="cell", distance_expr=_sq_grid_distance
+        p, id_col="caid", cell_col="cell", distance_expr=grid_distance
     ).select("caid", "rg")
     deg = degrees(
         _colocation_edge_list(spark, sf_dir), "a_user_id", "b_user_id"
@@ -1381,7 +1337,7 @@ _register_mobility_contact_corr()
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pres AS (
-        SELECT DISTINCT {_cell_sql()} AS cell,
+        SELECT DISTINCT {cell_sql(RES)} AS cell,
                CAST(cdmx_datetime AS DATE) AS day, caid
         FROM pings
     ),
@@ -1422,7 +1378,7 @@ def cell_daily_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     day is absent drop on both engines (inner sizes join), and a
     consecutive pair with zero common devices keeps Jaccard 0 via the
     zero-fill left join. Top-50 cells under a total tie order."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     pres = p.select(
         "cell", F.to_date("cdmx_datetime").alias("day"), "caid"
     # three consumers (sizes, shifted copy, intersection join) would
@@ -1473,7 +1429,7 @@ def cell_daily_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PINGS_CTE.strip()},
     pc AS (
-        SELECT caid, {_cell_sql()} AS cell,
+        SELECT caid, {cell_sql(RES)} AS cell,
                hour(cdmx_datetime) AS h
         FROM pings
     ),
@@ -1532,7 +1488,7 @@ def commute_asymmetry_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     commute_matrix (guide §2.4; byte-neutral, see there)."""
     from ..operators.winners import top1_per_key
 
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     p = p.withColumn("h", F.hour("cdmx_datetime")).repartition(F.col("caid"))
 
     def winner(filtered: DataFrame, out: str) -> DataFrame:

@@ -18,7 +18,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 QUERIES = ("colocation_pairs", "region_nation_revenue")
 PER_QUERY = {
-    "spark_s", "duck_s", "ratio", "spark_rows", "duck_rows", "counts_match",
+    "spark_s", "build_s", "duck_s", "ratio", "spark_rows", "duck_rows", "counts_match",
     "jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s",
     "shuffle_write_mb", "spill_mb", "data_s", "floor_share", "data_over_duck",
 }
@@ -53,6 +53,7 @@ def test_ab_record_fields(ab):
         assert r["counts_match"] is True and r["spark_rows"] == r["duck_rows"], name
         assert r["ratio"] == pytest.approx(r["spark_s"] / r["duck_s"], rel=1e-3)
         assert r["data_s"] == pytest.approx(r["executor_run_s"] / ab["cores"], abs=1e-4)
+        assert r["build_s"] > 0, name
         # the event log attributed this query's jobs to its job group
         assert r["jobs"] > 0 and r["tasks"] > 0 and r["executor_run_s"] > 0, name
 

@@ -10,7 +10,7 @@ import os
 from pyspark.sql import Row
 
 from epiteam_network_etl_functions_spark import cli
-from epiteam_network_etl_functions_spark.functions.hexgrid import _fallback_cell
+from epiteam_network_etl_functions_spark.functions.squaregrid import py_cell_of
 from epiteam_network_etl_functions_spark.plans.mobility import cells_to_regions_dim
 
 
@@ -35,8 +35,8 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     cells_to_regions_dim(
         spark.createDataFrame(
             [
-                Row(cells=[_fallback_cell(19.05, -99.05, 15)], cve_geo="0901200010010"),
-                Row(cells=[_fallback_cell(19.61, -99.61, 15)], cve_geo="1502100020020"),
+                Row(cells=[py_cell_of(19.05, -99.05, 15)], cve_geo="0901200010010"),
+                Row(cells=[py_cell_of(19.61, -99.61, 15)], cve_geo="1502100020020"),
             ]
         )
     ).write.parquet(dim_path)

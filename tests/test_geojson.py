@@ -62,9 +62,9 @@ def test_polygon_cover_and_locate(spark):
     assert dim.count() >= 2
 
     # a ping inside Alpha's box must attribute to 09010
-    from epiteam_network_etl_functions_spark.functions.hexgrid import _fallback_cell
+    from epiteam_network_etl_functions_spark.functions.squaregrid import py_cell_of
 
-    ping_cell = _fallback_cell(19.05, -99.05, 7)
+    ping_cell = py_cell_of(19.05, -99.05, 7)
     pings = spark.createDataFrame([Row(caid="A", h3index_15=ping_cell)])
     out = locate_pings(pings, dim).collect()[0]
     assert out["cve_geo"] == "09010"
@@ -109,10 +109,10 @@ def test_nonconvex_cover_excludes_notch(spark):
     bbox = set(polygon_bbox_cells(geom_json, res=6))
     cover = set(polygon_cover_cells(geom_json, res=6))
     assert cover < bbox  # strictly refined
-    from epiteam_network_etl_functions_spark.functions.hexgrid import _fallback_cell
+    from epiteam_network_etl_functions_spark.functions.squaregrid import py_cell_of
 
-    notch_cell = _fallback_cell(19.75, -99.25, 6)
-    arm_cell = _fallback_cell(19.25, -99.25, 6)
+    notch_cell = py_cell_of(19.75, -99.25, 6)
+    arm_cell = py_cell_of(19.25, -99.25, 6)
     assert notch_cell in bbox and notch_cell not in cover
     assert arm_cell in cover
 

@@ -399,10 +399,10 @@ dim AS MATERIALIZED (
 
 
 def test_fact_pings_base_joinback(spark):
-    from epiteam_network_etl_functions_spark.functions.hexgrid import _fallback_cell
+    from epiteam_network_etl_functions_spark.functions.squaregrid import py_cell_of
     from epiteam_network_etl_functions_spark.plans.mobility import fact_pings_base
 
-    cell = _fallback_cell(19.05, -99.05, 15)
+    cell = py_cell_of(19.05, -99.05, 15)
     dim = cells_to_regions_dim(
         spark.createDataFrame([Row(cells=[cell], cve_geo="0901200010010")])
     )
@@ -428,14 +428,18 @@ def test_hexgrid_null_inputs_yield_nulls(spark):
         k_ring,
     )
 
+    nan, inf = float("nan"), float("inf")
     df = spark.createDataFrame(
-        [Row(lat=19.0, lon=-99.0), Row(lat=None, lon=-99.0), Row(lat=19.0, lon=None)]
+        [Row(lat=19.0, lon=-99.0), Row(lat=None, lon=-99.0), Row(lat=19.0, lon=None),
+         Row(lat=nan, lon=-99.0), Row(lat=inf, lon=-99.0), Row(lat=19.0, lon=-inf)],
+        "lat double, lon double",
     )
     out = df.select(
         cell_of("lat", "lon", 7).alias("cell")
     ).collect()
     assert out[0]["cell"] is not None
-    assert out[1]["cell"] is None and out[2]["cell"] is None
+    # NULL, NaN and +-inf coordinates have no cell: NULL out, no crash
+    assert all(r["cell"] is None for r in out[1:]), out
 
     cells = spark.createDataFrame(
         [Row(a="g7:1:1", b="g7:2:2"), Row(a=None, b="g7:2:2")]

@@ -4,7 +4,7 @@ and the rewrites must stay value-identical to the forms they replaced.
 Each test pins one of the r14 optimizations (OPTIMIZATION_r14.md):
 - minhash_signatures: hash-aggregable int-min == the old string-min.
 - explode_shingles: per-row array_distinct == the old global DISTINCT.
-- device_rg distance_expr: JVM Chebyshev == the pandas-UDF fallback.
+- device_rg distance_expr: JVM Chebyshev == the square grid's Python reference.
 - tfidf_top_terms: the pushed emptiness filter must not re-tokenize.
 
 SPARK-VERSION COUPLING (ADVICE r14): the plan-shape locks assert exact
@@ -90,10 +90,12 @@ def test_explode_shingles_equals_global_distinct(spark):
 
 
 def test_sq_grid_distance_matches_udf(spark):
-    """The JVM Chebyshev expression must equal the hexgrid pandas-UDF
-    fallback on square-grid ids, including negative axes and NULLs."""
-    from epiteam_network_etl_functions_spark.functions.hexgrid import grid_distance
-    from epiteam_network_etl_functions_spark.workload.pings import _sq_grid_distance
+    """The square grid's JVM Chebyshev expression must equal its Python
+    reference on square-grid ids, including negative axes and NULLs."""
+    from epiteam_network_etl_functions_spark.functions.squaregrid import (
+        grid_distance,
+        py_grid_distance,
+    )
 
     rows = [
         ("g9:0:0", "g9:0:0"),
@@ -103,14 +105,10 @@ def test_sq_grid_distance_matches_udf(spark):
         (None, "g9:1:1"),
     ]
     df = spark.createDataFrame(rows, "a string, b string")
-    out = df.select(
-        _sq_grid_distance(F.col("a"), F.col("b")).alias("jvm"),
-        grid_distance("a", "b").alias("udf"),
-    )
-    got = [(r["jvm"], r["udf"]) for r in out.collect()]
-    assert all(j == u for j, u in got), got
-    assert got[1][0] == 11  # max(|3-(-2)|, |-4-7|)
-    assert got[3][0] is None and got[4][0] is None
+    got = [r["jvm"] for r in df.select(grid_distance(F.col("a"), F.col("b")).alias("jvm")).collect()]
+    want = [None if None in (a, b) else py_grid_distance(a, b) for a, b in rows]
+    assert got == want, got
+    assert got[1] == 11  # max(|3-(-2)|, |-4-7|)
 
 
 def test_device_rg_square_grid_plan_has_no_python(spark):
@@ -151,8 +149,9 @@ def test_pos_spine_single_exchange_and_value_identical(spark):
 
     import __spark_entry__ as m
     from epiteam_network_etl_functions_spark.plans.mobility import with_cells
+    from epiteam_network_etl_functions_spark.functions.squaregrid import cell_sql
     from epiteam_network_etl_functions_spark.workload.pings import (
-        _cell_expr,
+        RES,
         _pings,
         _pos_spine,
     )
@@ -164,7 +163,7 @@ def test_pos_spine_single_exchange_and_value_identical(spark):
     assert len(re.findall(r"\bSort \[", plan)) == 1
 
     new = _pos_spine(spark, sf)
-    p = with_cells(_pings(spark, sf), out_col="cell", cell_expr=_cell_expr())
+    p = with_cells(_pings(spark, sf), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     old = p.groupBy("caid", "cdmx_datetime").agg(F.min("cell").alias("cell"))
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
 
