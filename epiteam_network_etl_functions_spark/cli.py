@@ -53,7 +53,7 @@ from .plans.contact_matrix import contact_prob_table, probs_to_matrix
 from .plans.mobility import (
     daily_home_winners,
     extract_day,
-    impute_neighbour_frequency_labels,
+    impute_neighbour_frequency,
     locate_homes,
     locate_pings,
     night_presence_scores,
@@ -142,11 +142,7 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
     ).select("caid", "home_ageb", "score", "confidence")
     if args.impute_rounds > 0:
         comp = connected_components(interactions, a_col="a_caid", b_col="b_caid")
-        # long-label form: no component has to fit in a row (the arrays
-        # form is kept for the reference-parity workload query)
-        homes = impute_neighbour_frequency_labels(
-            homes, comp, rounds=args.impute_rounds
-        )
+        homes = impute_neighbour_frequency(homes, comp)
     homes = _write_ir(spark, homes, paths["homes"])
     if args.quality_gate:
         # Declarative stage gate (the reference's logged sanity counts,
@@ -377,8 +373,8 @@ def corpus_stage(spark, args) -> None:
         shards=args.corpus_shards,
     )
     res.packed.write.mode("overwrite").parquet(_out(args, "corpus_packed.parquet"))
-    # the funnel counts the boundaries this run already materialized
-    corpus_funnel(corpus, res).toPandas().to_csv(
+    # the funnel reads the counts this run already observed
+    corpus_funnel(res).toPandas().to_csv(
         _out(args, "corpus_funnel.csv"), index=False
     )
     print(

@@ -1,13 +1,16 @@
 """Distributed connected components over an edge list.
 
-The reference consumes `connected_component` arrays for neighbour-frequency
-imputation (home_ageb_imputers.py:120-206) but builds them with networkx on
-one machine. ``connected_components`` computes them on the cluster with
-large-star/small-star rounds: O(log n) rounds on any topology, each round
-working on the edge list alone (no driver-side graph), with state
-localCheckpointed every round and the previous round unpersisted. The
-mobility chain's imputation, the corpus stage's fuzzy dedup and the text
-queries' near-duplicate clusters all run this one kernel.
+The reference builds the `connected_component` arrays of its
+neighbour-frequency imputation (home_ageb_imputers.py:120-206) with networkx
+on one machine. ``connected_components`` computes the components on the
+cluster with large-star/small-star rounds: O(log n) rounds on any topology,
+each round working on the edge list alone (no driver-side graph), with state
+localCheckpointed every round and the previous round unpersisted. Its output
+is long (node_id, component_id) labels, which the imputer
+(plans/mobility.impute_neighbour_frequency) joins directly, so no component
+has to fit in a row. The mobility chain's imputation, the corpus stage's
+fuzzy dedup and the text queries' near-duplicate clusters all run this one
+kernel.
 """
 
 from __future__ import annotations
@@ -125,16 +128,3 @@ def connected_components(
         e.select(F.col("v").alias("node_id"), F.col("v").alias("component_id")).distinct()
     )
 
-
-def components_as_arrays(
-    labels: DataFrame, id_col: str = "node_id", comp_col: str = "component_id"
-) -> DataFrame:
-    """The reference's `connected_component` array form (sorted member
-    lists), feeding plans/mobility.impute_neighbour_frequency. Only for
-    components that fit in a row — bounded by construction in the
-    co-location graph; keep the (node, component) long form at scale."""
-    return (
-        labels.groupBy(comp_col)
-        .agg(F.array_sort(F.collect_list(id_col)).alias("connected_component"))
-        .drop(comp_col)
-    )

@@ -5,7 +5,8 @@ probability matrix.
 The stage boundaries that the reference materializes to `side_results/`
 parquet (NetworkBuilder.py:120,151,209,260) are the CLI's stage IR
 (cli.gen_tables / cli.prob_matrix); this module is the lazy plan between
-them.
+them, and the one the `contact_probs` / `total_vs_observed` workload
+queries run too.
 """
 
 from __future__ import annotations
@@ -31,8 +32,12 @@ def contact_prob_table(
     """Long-form (a_block, b_block, total_pairs, observed, prob) table —
     the NetworkBuilder get_tables() flow after co-location as one lazy DAG.
     ``pairs`` holds the distinct ordered (a_<id>, b_<id>) co-location
-    pairs, the widest shuffle in the product, computed once upstream."""
-    homes = homes.localCheckpoint()  # feeds sizes + both endpoint attaches
+    pairs, the widest shuffle in the product, computed once upstream.
+
+    ``homes`` (one row per id) feeds three branches: the block sizes and
+    both endpoint attaches. The caller passes it materialized so it is
+    computed once: the CLI chain its homes IR read back from parquet, the
+    registered queries a ``cache()``d winners table."""
     sizes = group_sizes(homes, block_col=home_col, id_col=id_col)
     total = total_contacts(sizes, block_col=home_col)
     obs = observed_contacts(

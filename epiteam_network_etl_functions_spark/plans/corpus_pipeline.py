@@ -57,6 +57,33 @@ class CorpusConfig:
 # ---- stages -----------------------------------------------------------------
 
 
+def fan_out(docs: DataFrame) -> DataFrame:
+    """Spread a corpus of few splits over the cluster before the quality
+    gate (the tfidf_top_terms rule, with a twist): the gate's per-row
+    entropy/bigram work expands far beyond the compressed bytes, so a
+    corpus that is a handful of parquet splits would run the gate on as
+    many tasks. A bare repartition() does NOT fix it — Catalyst pushes the
+    deterministic gate predicates through the exchange down to the narrow
+    scan stage (measured: 115 s either way at the 10x tier, where one
+    5.8 MB file gave 2 splits on 32 cores, vs ~6 s once the work actually
+    lands on 32 tasks). The barrier must be hard: when the input's split
+    count is far below the cluster parallelism, the repartitioned raw docs
+    are localCheckpointed (an RDD boundary no filter can sink below) and
+    the gate evaluates on the fanned-out copy — measured 115 s -> 8 s. The
+    checkpoint is LAZY (eager=False): nothing materializes unless the
+    caller actually executes the gated result, and repeated plan-building
+    invocations don't pin executor storage. Fault-tolerance trade-off,
+    accepted: localCheckpoint truncates lineage, so an executor loss after
+    materialization fails the job instead of recomputing — fine in local
+    mode and for the small-split case this branch guards; at production
+    scale the input has thousands of splits so neither the shuffle nor the
+    checkpoint ever happens."""
+    sc = docs.sparkSession.sparkContext
+    if docs.rdd.getNumPartitions() * 4 <= sc.defaultParallelism:
+        return docs.repartition(sc.defaultParallelism).localCheckpoint(eager=False)
+    return docs
+
+
 def gate_quality(
     docs: DataFrame,
     cfg: CorpusConfig,
@@ -65,33 +92,8 @@ def gate_quality(
 ) -> DataFrame:
     """Gopher-family quality gate: token-count floor, bigram-repetition
     ceiling, char-entropy floor. All three are per-row JVM array
-    arithmetic (operators/text kernels) — map-only, fuses with the scan.
-
-    Scan fan-out (the tfidf_top_terms rule, with a twist): the per-row
-    entropy/bigram work expands far beyond the compressed bytes, so a
-    corpus that is a handful of parquet splits runs this gate on as many
-    tasks. A bare repartition() does NOT fix it — Catalyst pushes the
-    deterministic gate predicates through the exchange down to the
-    narrow scan stage (measured: 115 s either way at the 10x tier, where
-    one 5.8 MB file gave 2 splits on 32 cores, vs ~6 s once the work
-    actually lands on 32 tasks). The barrier must be hard: when the
-    input's split count is far below the cluster parallelism, the
-    repartitioned raw docs are localCheckpointed (an RDD boundary no
-    filter can sink below) and the gate evaluates on the fanned-out
-    copy — measured 115 s -> 8 s. The checkpoint is LAZY
-    (eager=False): nothing materializes unless the caller actually
-    executes the gated result, and repeated plan-building invocations
-    don't pin executor storage. Fault-tolerance trade-off, accepted:
-    localCheckpoint truncates lineage, so an executor loss after
-    materialization fails the job instead of recomputing — fine in
-    local mode and for the small-split case this branch guards; at
-    production scale the input has thousands of splits so neither the
-    shuffle nor the checkpoint ever happens."""
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() * 4 <= sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism).localCheckpoint(
-            eager=False
-        )
+    arithmetic (operators/text kernels) — map-only, fuses with the scan
+    (see fan_out for inputs of few splits)."""
     toks = tokens_col(text_col)
     rep = bigram_repetition_ratio(toks)
     ent = char_entropy_nats(F.col(text_col))
@@ -192,6 +194,9 @@ def pack_bins(
 # ---- composition ------------------------------------------------------------
 
 
+STAGES = ("raw", "quality_gate", "exact_dedup", "fuzzy_dedup", "decontaminate")
+
+
 @dataclass
 class CorpusResult:
     gated: DataFrame
@@ -199,9 +204,7 @@ class CorpusResult:
     fuzzy_kept: DataFrame
     decontaminated: DataFrame
     packed: DataFrame
-
-
-STAGES = ("raw", "quality_gate", "exact_dedup", "fuzzy_dedup", "decontaminate")
+    counts: tuple[int, ...]  # documents out of each of the STAGES
 
 
 def run_corpus_pipeline(
@@ -219,56 +222,48 @@ def run_corpus_pipeline(
     Each of the four stage boundaries is localCheckpointed — the
     reference's materialized-stage-IR discipline (every stage writes
     parquet before the next reads it) — so every consumer of a stage
-    frame (the next stage, the export, the funnel report) reads it
-    without replaying the upstream chain. At production scale swap
-    localCheckpoint for a parquet write per stage — same plan shape,
-    restartable."""
+    frame (the next stage, the export) reads it without replaying the
+    upstream chain. At production scale swap localCheckpoint for a
+    parquet write per stage — same plan shape, restartable.
+
+    The document count of the input and of each boundary is observed on
+    the checkpoint job that materializes it, so ``counts`` (the funnel
+    report, the export's shard size) costs no job of its own. The input
+    count is observed above fan_out's lazy checkpoint, not inside it: with
+    AQE off, an observation inside a lazy checkpoint completes when the
+    checkpoint is defined, before any row is read, and reads 0."""
     cfg = cfg or CorpusConfig()
-    gated = gate_quality(docs, cfg, id_col, text_col).localCheckpoint()
-    exact = dedup_exact(gated, id_col, text_col).localCheckpoint()
-    fuzzy = dedup_fuzzy(exact, cfg, id_col, text_col).localCheckpoint()
-    clean = decontaminate(fuzzy, bench, cfg, id_col, text_col)
-    # the shard size needs the survivor count: observed on the checkpoint
-    # job, so the export's own count is the only count of ``clean``
-    seen = Observation("corpus_clean")
-    clean = clean.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    seen = [Observation() for _ in STAGES]
+
+    def counted(df: DataFrame, stage: int) -> DataFrame:
+        return df.observe(seen[stage], F.count(F.lit(1)).alias("n"))
+
+    gated = counted(gate_quality(counted(fan_out(docs), 0), cfg, id_col, text_col), 1)
+    gated = gated.localCheckpoint()
+    exact = counted(dedup_exact(gated, id_col, text_col), 2).localCheckpoint()
+    fuzzy = counted(dedup_fuzzy(exact, cfg, id_col, text_col), 3).localCheckpoint()
+    clean = counted(decontaminate(fuzzy, bench, cfg, id_col, text_col), 4)
+    clean = clean.localCheckpoint()
+    counts = tuple(int(o.get["n"]) for o in seen)
     packed = pack_bins(clean, cfg, id_col, text_col)
     if out_dir is not None:
         from ..sources.io import write_jsonl_shards
 
-        n = seen.get["n"]
         write_jsonl_shards(
-            clean, out_dir, records_per_shard=max(1, -(-n // shards))
+            clean, out_dir, records_per_shard=max(1, -(-counts[-1] // shards))
         )
-    return CorpusResult(gated, exact, fuzzy, clean, packed)
+    return CorpusResult(gated, exact, fuzzy, clean, packed, counts)
 
 
-def corpus_funnel(docs: DataFrame, res: CorpusResult) -> DataFrame:
+def corpus_funnel(res: CorpusResult) -> DataFrame:
     """Per-stage survival report (stage_id, stage, docs_in, docs_out) of
-    a finished ``run_corpus_pipeline(docs, ...)`` run — the dedup-rate
-    audit every corpus build publishes. One scalar count per
-    materialized stage boundary, unioned, folded into one row of five
-    counts and stacked back into one row per stage, each stage's docs_in
-    being the previous stage's docs_out — no window, so no
-    single-partition window warning. All counts are exact BIGINTs, the
+    a finished ``run_corpus_pipeline`` run — the dedup-rate audit every
+    corpus build publishes. Five local rows built from the counts the run
+    observed, each stage's docs_in being the previous stage's docs_out:
+    no Spark job computes them. All counts are exact BIGINTs, the
     stage_id is the unique sort key."""
-    frames = (
-        docs,
-        res.gated,
-        res.exact_kept,
-        res.fuzzy_kept,
-        res.decontaminated,
-    )
-    counts = None
-    for i, frame in enumerate(frames):
-        n = frame.agg(F.count(F.lit(1)).alias("n")).select(F.lit(i).alias("i"), "n")
-        counts = n if counts is None else counts.unionByName(n)
-    counts = counts.agg(
-        *(F.max(F.when(F.col("i") == i, F.col("n"))).alias(f"n{i}") for i in range(len(frames)))
-    )
-    rows = ", ".join(
-        f"{i}, '{name}', n{max(i - 1, 0)}, n{i}" for i, name in enumerate(STAGES)
-    )
-    return counts.selectExpr(
-        f"stack({len(STAGES)}, {rows}) AS (stage_id, stage, docs_in, docs_out)"
+    n = res.counts
+    return res.packed.sparkSession.createDataFrame(
+        [(i, stage, n[max(i - 1, 0)], n[i]) for i, stage in enumerate(STAGES)],
+        "stage_id int, stage string, docs_in bigint, docs_out bigint",
     )

@@ -255,73 +255,33 @@ def impute_kring(
 
 def impute_neighbour_frequency(
     homes: DataFrame,
-    components: DataFrame,
-    id_col: str = "caid",
-    home_col: str = "home_ageb",
-    comp_col: str = "connected_component",
-    sentinel: str = SENTINEL_AGEB_13,
-    rounds: int = 6,
-) -> DataFrame:
-    """Neighbour-frequency imputation (home_ageb_imputers.py:120-206):
-    devices with sentinel homes inherit the most frequent home among their
-    component neighbours. The reference's ARRAY_CONTAINS theta join (J8)
-    becomes explode + equi-join — hash join instead of nested-loop.
-
-    Takes the reference's array component form — each component must fit
-    in a row; :func:`impute_neighbour_frequency_labels` is the unbounded
-    variant over long (node, component) labels."""
-    # Stable component ids: hash of the sorted member list (a monotonic id
-    # would be nondeterministic across retries).
-    member = components.select(
-        F.md5(F.concat_ws(",", F.array_sort(F.col(comp_col))).cast("binary")).alias(
-            "__comp_id"
-        ),
-        F.explode(F.col(comp_col)).alias(id_col),
-    )
-    return _impute_by_member(homes, member, id_col, home_col, sentinel, rounds)
-
-
-def impute_neighbour_frequency_labels(
-    homes: DataFrame,
     labels: DataFrame,
     id_col: str = "caid",
     home_col: str = "home_ageb",
     node_col: str = "node_id",
     comp_col: str = "component_id",
     sentinel: str = SENTINEL_AGEB_13,
-    rounds: int = 6,
 ) -> DataFrame:
-    """The 100 TB form of neighbour-frequency imputation: consumes
-    connected_components' long (node_id, component_id) labels
-    directly — no component ever has to fit in a row, so the
-    components_as_arrays ceiling is off the product path entirely. The
-    component id (the component's min node id) is deterministic, and it is
-    only a grouping key: the fill choice per component is (count DESC,
-    home ASC), so arrays and labels entry points yield identical output."""
-    member = labels.select(
-        F.col(comp_col).alias("__comp_id"), F.col(node_col).alias(id_col)
-    )
-    return _impute_by_member(homes, member, id_col, home_col, sentinel, rounds)
+    """Neighbour-frequency imputation (home_ageb_imputers.py:120-206):
+    devices with sentinel homes inherit the most frequent home among their
+    component neighbours. The reference's ARRAY_CONTAINS theta join (J8)
+    becomes an equi-join on long (node, component) labels, such as
+    connected_components' output, so no component ever has to fit in a
+    row. The component id is only a grouping key: the fill choice per
+    component is (count DESC, home ASC).
 
-
-def _impute_by_member(
-    homes: DataFrame,
-    member: DataFrame,
-    id_col: str,
-    home_col: str,
-    sentinel: str,
-    rounds: int,
-) -> DataFrame:
-    """One pass is the fixpoint of the reference's repeated rounds: the
+    One pass is the fixpoint of the reference's repeated rounds: the
     first round fills every sentinel device whose component holds a
     non-sentinel member, and the components left over hold only sentinel
     members, so no later round can fill anything (components are disjoint,
-    as connected components are). ``rounds <= 0`` disables imputation.
+    as connected components are). Callers that want no imputation skip
+    the call.
 
     Both windows run on one exchange: hash partitioning on the component
     satisfies the (component, home) window too."""
-    if rounds <= 0:
-        return homes
+    member = labels.select(
+        F.col(comp_col).alias("__comp_id"), F.col(node_col).alias(id_col)
+    )
     n = F.count(F.lit(1)).over(Window.partitionBy("__comp_id", home_col))
     # the (n DESC, home ASC) winner among the component's non-sentinel rows
     best = F.min(
@@ -332,7 +292,7 @@ def _impute_by_member(
         .repartition("__comp_id")
         .select(id_col, home_col, best[home_col].alias("__fill"))
         .where((F.col(home_col) == sentinel) & F.col("__fill").isNotNull())
-        # a device listed in several member arrays takes the smallest fill
+        # a device labelled into several components takes the smallest fill
         .groupBy(id_col)
         .agg(F.min("__fill").alias("__fill"))
     )

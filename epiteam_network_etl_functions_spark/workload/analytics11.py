@@ -502,7 +502,7 @@ def home_work_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inner join at device cardinality). Distances cap at 10 for a
     bounded histogram."""
     from ..functions.squaregrid import cell_sql, grid_distance
-    from ..operators.winners import top1_per_key
+    from ..operators.winners import category_winner
     from .pings import RES, _pings
     from ..plans.mobility import with_cells
 
@@ -512,13 +512,9 @@ def home_work_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = p.where((hr >= 9) & (hr < 17))
 
     def anchor(df: DataFrame, name: str) -> DataFrame:
-        counts = df.groupBy("caid", "cell").agg(
-            F.count(F.lit(1)).alias("n")
+        return category_winner(df, "caid", "cell", out_category=name, out_score="n").select(
+            "caid", name
         )
-        won = top1_per_key(
-            counts, ["caid"], [F.desc("n"), F.asc("cell")]
-        )
-        return won.select("caid", F.col("cell").alias(name))
 
     j = anchor(night, "home_cell").join(anchor(work, "work_cell"), "caid")
     cheb = grid_distance("home_cell", "work_cell")

@@ -18,15 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import catalog
 from ..operators.colocation import colocation_edges, colocation_pairs
-from ..operators.contacts import (
-    contact_probs,
-    group_sizes,
-    observed_contacts,
-    total_contacts,
-    total_vs_observed,
-)
+from ..operators.contacts import group_sizes
 from ..operators.timebucket import bucket_sql, with_time_bucket
 from ..operators.winners import category_winner
+from ..plans.contact_matrix import contact_prob_table
 from ..session import prep
 from . import query
 
@@ -353,26 +348,17 @@ tvo AS (
 """
 
 
-def _tvo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The winners table feeds three branches (sizes, a-home, b-home);
-    # cache() materializes it once on first use (it is one row per device)
-    # so the scan+agg+window subtree is not recomputed per branch. Lazy
-    # cache, not localCheckpoint: checkpoint runs an eager job at plan-BUILD
-    # time, which serializes the driver for ~0.4s before execution starts.
+def _contact_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """plans/contact_matrix.contact_prob_table over the winners as homes
+    and the bucketed co-presence pairs. The winners feed three branches
+    (sizes, a-home, b-home); cache() materializes them once on first use
+    (one row per device). Lazy cache, not localCheckpoint: checkpoint runs
+    an eager job at plan-BUILD time, which serializes the driver for ~0.4s
+    before execution starts."""
     w = _winners(spark, sf_dir).cache()
-    sizes = group_sizes(w, block_col="home_type", id_col="user_id")
-    total = total_contacts(sizes, block_col="home_type")
     p = _bucketed_presence(spark, sf_dir)
     pairs = colocation_pairs(p, id_col="user_id", cell_col="event_type", tw_col="tw")
-    obs = observed_contacts(
-        pairs,
-        homes=w,
-        pair_a="a_user_id",
-        pair_b="b_user_id",
-        home_key="user_id",
-        home_val="home_type",
-    )
-    return total_vs_observed(total, obs, "a_home_type", "b_home_type")
+    return contact_prob_table(pairs, w, id_col="user_id", home_col="home_type")
 
 
 @query(
@@ -383,7 +369,7 @@ def total_vs_observed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sizes cross-join totals (J4) + observed pair counts (A2) outer-completed
     with 0 (J5: NetworkBuilder.py:213-262). Keeps the reference's semantics:
     total counts self-pairs, observed counts ordered distinct pairs."""
-    return _tvo(spark, sf_dir)
+    return _contact_table(spark, sf_dir).drop("prob")
 
 
 @query(
@@ -399,7 +385,7 @@ def total_vs_observed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def contact_probs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contact probability matrix in long form (F13: observed/total with
     zero-guard, NetworkBuilder.py:297-317)."""
-    return contact_probs(_tvo(spark, sf_dir), "a_home_type", "b_home_type")
+    return _contact_table(spark, sf_dir)
 
 
 @query(

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from .. import catalog
 from ..constants import SENTINEL_AGEB_13
 from ..functions.squaregrid import cell_sql, grid_distance, k_ring
-from ..operators.winners import top1_per_key
+from ..operators.winners import category_winner, top1_per_key
 from ..operators.colocation import colocation_pairs
 from ..operators.timebucket import with_time_bucket
 from ..plans.gyration import device_rg
@@ -147,18 +147,13 @@ winners AS MATERIALIZED (
 """
 
 
-def _visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(caid, cell, n) visit counts, the upstream of the all-time winner."""
-    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
-    return p.groupBy("caid", "cell").agg(F.count(F.lit(1)).alias("n"))
-
-
 def _home_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(caid, cell) all-time winner per device, by (n DESC, cell ASC). The
+    """(caid, cell) all-time winner per device: the W4 count argmax
+    (operators/winners.category_winner, ties to the smaller cell). The
     winners also feed _homes' dim branch: _dim_from_cells over their
     distinct cells."""
-    allc = _visits(spark, sf_dir)
-    return top1_per_key(allc, ["caid"], [F.desc("n"), F.asc("cell")]).select(
+    p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
+    return category_winner(p, "caid", "cell", out_category="cell", out_score="n").select(
         "caid", "cell"
     )
 
@@ -403,18 +398,18 @@ def pings_impute_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
     """impute_neighbour_frequency: sentinel homes inherit the most frequent
     non-sentinel home in their connected component
     (home_ageb_imputers.py:120-206). Components derive from a deterministic
-    hash partition of the device population; the oracle is the one-round
+    hash partition of the device population, handed to the chain's imputer
+    as (caid, bucket) labels; the oracle is the one-round
     closed form (round 1 fills every fillable device, later rounds are
     no-ops, so the loop's fixpoint equals the single-round result)."""
     homes = _homes(spark, sf_dir)
-    members = _pings(spark, sf_dir).select("caid").distinct()
-    components = (
-        members.withColumn("cb", F.expr(f"{_hb_spark('caid', 'comp', 30)}"))
-        .groupBy("cb")
-        .agg(F.array_sort(F.collect_set("caid")).alias("connected_component"))
-        .select("connected_component")
+    labels = (
+        _pings(spark, sf_dir)
+        .select("caid")
+        .distinct()
+        .withColumn("cb", F.expr(f"{_hb_spark('caid', 'comp', 30)}"))
     )
-    return impute_neighbour_frequency(homes, components)
+    return impute_neighbour_frequency(homes, labels, node_col="caid", comp_col="cb")
 
 
 @query(
@@ -632,11 +627,9 @@ def pings_impute_kring_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned frame is dropped — a cache() here would pin executor
     # storage for the rest of the session (one leak per invocation).
     p = _with_hex_cell(_pings(spark, sf_dir)).select("caid", "cell").localCheckpoint()
-    allc = p.groupBy("caid", "cell").agg(F.count(F.lit(1)).alias("n"))
-    homes = (
-        top1_per_key(allc, ["caid"], [F.desc("n"), F.asc("cell")])
-        .select("caid", F.col("cell").alias("home_cell"))
-    )
+    homes = category_winner(
+        p, "caid", "cell", out_category="home_cell", out_score="n"
+    ).select("caid", "home_cell")
     out = impute_kring(
         homes,
         _hex_dim(p),
@@ -1031,17 +1024,11 @@ def commute_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash-derived cells make (caid, cell) near-unique per ping
     (sf0.1 night window: 33426 rows -> 33296 groups), so the forgone
     map-side partial aggregate reduced nothing."""
-    from ..operators.winners import top1_per_key
-
     p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     p = p.withColumn("h", F.hour("cdmx_datetime")).repartition(F.col("caid"))
 
     def winner(filtered: DataFrame, out: str) -> DataFrame:
-        scored = filtered.groupBy("caid", "cell").agg(
-            F.count(F.lit(1)).alias("score")
-        )
-        w = top1_per_key(scored, ["caid"], [F.desc("score"), F.asc("cell")])
-        return w.select("caid", F.col("cell").alias(out))
+        return category_winner(filtered, "caid", "cell", out_category=out).select("caid", out)
 
     home = winner(p.where((F.col("h") >= 22) | (F.col("h") < 6)), "home_cell")
     work = winner(p.where((F.col("h") >= 9) & (F.col("h") < 17)), "work_cell")
@@ -1486,17 +1473,11 @@ def commute_asymmetry_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared). Top-30 pairs by total flow under a total tie order.
     Winner branches run on one caid spine exchange each, exactly as
     commute_matrix (guide §2.4; byte-neutral, see there)."""
-    from ..operators.winners import top1_per_key
-
     p = with_cells(_pings(spark, sf_dir), out_col="cell", cell_expr=F.expr(cell_sql(RES)))
     p = p.withColumn("h", F.hour("cdmx_datetime")).repartition(F.col("caid"))
 
     def winner(filtered: DataFrame, out: str) -> DataFrame:
-        scored = filtered.groupBy("caid", "cell").agg(
-            F.count(F.lit(1)).alias("score")
-        )
-        w = top1_per_key(scored, ["caid"], [F.desc("score"), F.asc("cell")])
-        return w.select("caid", F.col("cell").alias(out))
+        return category_winner(filtered, "caid", "cell", out_category=out).select("caid", out)
 
     home = winner(p.where((F.col("h") >= 22) | (F.col("h") < 6)), "hc")
     work = winner(p.where((F.col("h") >= 9) & (F.col("h") < 17)), "wc")

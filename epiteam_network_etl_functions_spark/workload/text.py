@@ -25,6 +25,7 @@ from ..operators.text import (
     fingerprint,
     quality_scores,
 )
+from ..plans.corpus_pipeline import CorpusConfig
 from ..session import prep
 from . import query
 
@@ -960,11 +961,11 @@ def doc_blocklist_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- round-7: composed corpus pipeline + audits -----------------------------
 
-# corpus_funnel gate thresholds — must match plans/corpus_pipeline.CorpusConfig
-# defaults AND the SQL literals below (checked by tests/test_corpus_pipeline).
-_CF_MIN_TOKENS = 15
-_CF_MAX_REP = 0.10
-_CF_MIN_ENTROPY = 2.7
+# corpus_funnel gate thresholds: the plans/corpus_pipeline.CorpusConfig
+# defaults the Spark side runs with, rendered into the SQL literals below.
+_CF_MIN_TOKENS = CorpusConfig().min_tokens
+_CF_MAX_REP = CorpusConfig().max_rep_ratio
+_CF_MIN_ENTROPY = CorpusConfig().min_entropy
 _CF_BENCH_MAX_ID = 20
 
 # Gated-corpus pipeline CTE chain shared by the funnel oracle: corpus =
@@ -1113,9 +1114,7 @@ def corpus_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     corpus = d.where(F.col("doc_id") >= _CF_BENCH_MAX_ID)
     bench = d.where(F.col("doc_id") < _CF_BENCH_MAX_ID)
-    return cp.corpus_funnel(
-        corpus, cp.run_corpus_pipeline(corpus, bench, cp.CorpusConfig())
-    )
+    return cp.corpus_funnel(cp.run_corpus_pipeline(corpus, bench, cp.CorpusConfig()))
 
 
 @query(

@@ -40,29 +40,38 @@ def _args(out: str, extra: list[str] | None = None):
 # when every consumer re-ran the lazy lineage); about 1.5x the measured
 # count, so a reintroduced recompute fails here as a count, not as noise.
 GEN_TABLES_JOB_BUDGET = 60
-# corpus_stage on the same inputs ran 65-66 jobs when this budget was set
-# (96-98 with min-label propagation components, 180 when the funnel re-ran
-# the whole corpus pipeline); about 1.2x, below the min-label count.
-CORPUS_STAGE_JOB_BUDGET = 80
+# prob_matrix on the same inputs ran 8 jobs when this budget was set (9
+# when it localCheckpointed the homes IR it had just read back).
+PROB_MATRIX_JOB_BUDGET = 8
+# corpus_stage on the same inputs ran 58-59 jobs when this budget was set
+# (63-64 when the funnel counted the stage boundaries itself, 96-98 with
+# min-label propagation components, 180 when the funnel re-ran the whole
+# corpus pipeline); the 14-job margin of the earlier 80-job budget.
+CORPUS_STAGE_JOB_BUDGET = 73
 
 
 @pytest.fixture(scope="module")
 def chain(spark, tmp_path_factory):
     """One in-process chain on the demo inputs (tables and probs handed
-    forward), with the job count of its gen_tables stage."""
+    forward), with the job counts of its gen_tables and prob_matrix
+    stages."""
     out = str(tmp_path_factory.mktemp("chain"))
     args = _args(out)
     sc = spark.sparkContext
-    sc.setJobGroup("test-cli-gen-tables", "gen_tables job budget")
-    try:
-        tables = cli.gen_tables(spark, args)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("test-cli-gen-tables"))
-    probs = cli.prob_matrix(spark, args, tables)
+
+    def counted(group, fn, *fn_args):
+        sc.setJobGroup(group, f"{group} job budget")
+        try:
+            result = fn(*fn_args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tables, jobs = counted("test-cli-gen-tables", cli.gen_tables, spark, args)
+    probs, prob_jobs = counted("test-cli-prob-matrix", cli.prob_matrix, spark, args, tables)
     nodes, edges = cli.build_network(spark, args, tables, probs)
     return {"args": args, "tables": tables, "probs": probs, "nodes": nodes,
-            "edges": edges, "gen_tables_jobs": jobs}
+            "edges": edges, "gen_tables_jobs": jobs, "prob_matrix_jobs": prob_jobs}
 
 
 def _rows(path: str) -> list[tuple]:
@@ -189,6 +198,13 @@ def test_gen_tables_job_budget(chain):
     """Every gen_tables intermediate is computed once: the stage's job
     count stays within a budget measured on the same demo inputs."""
     assert 0 < chain["gen_tables_jobs"] <= GEN_TABLES_JOB_BUDGET, chain["gen_tables_jobs"]
+
+
+def test_prob_matrix_job_budget(chain):
+    """prob_matrix reads the homes IR as it is, with no checkpoint job of
+    its own: its job count stays within the count measured on the same
+    demo inputs."""
+    assert 0 < chain["prob_matrix_jobs"] <= PROB_MATRIX_JOB_BUDGET, chain["prob_matrix_jobs"]
 
 
 def test_cli_quality_gate_failure_leaves_no_ir(spark, tmp_path):

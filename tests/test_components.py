@@ -9,7 +9,6 @@ from pyspark.sql import Row, functions as F
 
 from epiteam_network_etl_functions_spark.constants import SENTINEL_AGEB_13
 from epiteam_network_etl_functions_spark.operators.components import (
-    components_as_arrays,
     connected_components,
 )
 
@@ -65,9 +64,8 @@ def test_components_feed_imputer(spark):
     edges = spark.createDataFrame(
         [Row(a_id="A", b_id="B"), Row(a_id="B", b_id="D"), Row(a_id="A", b_id="C")]
     )
-    comps = components_as_arrays(connected_components(edges))
-    got = comps.collect()
-    assert sorted(got[0]["connected_component"]) == ["A", "B", "C", "D"]
+    labels = connected_components(edges)
+    assert _labels(labels) == {"A": "A", "B": "A", "C": "A", "D": "A"}
 
     homes = spark.createDataFrame(
         [Row(caid="A", home_ageb="0901200010010"),
@@ -76,7 +74,7 @@ def test_components_feed_imputer(spark):
          Row(caid="D", home_ageb=SENTINEL_AGEB_13)]
     )
     out = {r["caid"]: r["home_ageb"]
-           for r in impute_neighbour_frequency(homes, comps, rounds=2).collect()}
+           for r in impute_neighbour_frequency(homes, labels).collect()}
     assert out["D"] == "0901200010010"
 
 

@@ -104,7 +104,7 @@ def funnel(spark):
     )
     docs = _docs(spark, [r for r in rows if r[0] >= 20])
     bench = _docs(spark, [r for r in rows if r[0] < 20])
-    return corpus_funnel(docs, run_corpus_pipeline(docs, bench, CFG))
+    return corpus_funnel(run_corpus_pipeline(docs, bench, CFG))
 
 
 def test_funnel_counts_monotone(funnel):
@@ -113,6 +113,23 @@ def test_funnel_counts_monotone(funnel):
     assert out[0][2] == out[0][3] == 8  # raw
     for (_, _, di, do), (_, _, _, prev) in zip(out[1:], out[:-1]):
         assert di == prev and do <= di  # chained + monotone
+
+
+def test_funnel_counts_a_fanned_out_input(spark):
+    """A corpus of one split is fanned out behind a lazy checkpoint before
+    the gate; the funnel's raw count is still the input's, with AQE off
+    too (an observation inside that checkpoint completes when it is
+    defined and reads 0)."""
+    docs = _docs(spark, [(20 + i, f"{GOOD} pad{i} tail{i}") for i in range(6)]).coalesce(1)
+    if docs.rdd.getNumPartitions() * 4 > spark.sparkContext.defaultParallelism:
+        pytest.skip("fan_out needs at least 4 cores to trigger")
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        res = run_corpus_pipeline(docs, _docs(spark, [(1, SHORT)]), CFG)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert res.counts[0] == 6, res.counts
 
 
 def test_funnel_plan_has_no_window(funnel):

@@ -156,8 +156,10 @@ def test_neighbour_frequency_impute(spark):
             Row(caid="E", home_ageb=SENTINEL_AGEB_13),  # isolated
         ]
     )
-    comps = spark.createDataFrame([Row(connected_component=["A", "B", "C", "D"])])
-    out = impute_neighbour_frequency(homes, comps, rounds=2)
+    labels = spark.createDataFrame(
+        [Row(node_id=d, component_id="c1") for d in ("A", "B", "C", "D")]
+    )
+    out = impute_neighbour_frequency(homes, labels)
     got = {r["caid"]: r["home_ageb"] for r in out.collect()}
     assert got["D"] == "0901200010010"  # majority home in component
     assert got["E"] == SENTINEL_AGEB_13  # no neighbours -> unchanged
@@ -165,15 +167,11 @@ def test_neighbour_frequency_impute(spark):
 
 
 def test_neighbour_frequency_labels_matches_arrays(spark):
-    """The long-label entry point (no component-fits-in-a-row ceiling)
-    fills identically to the reference-shaped arrays form — including
-    components the star kernel closes over a chain of edges."""
+    """The star kernel's labels fill identically to the reference's
+    component member lists written out by hand as (node, component) rows —
+    including components the kernel closes over a chain of edges."""
     from epiteam_network_etl_functions_spark.operators.components import (
-        components_as_arrays,
         connected_components,
-    )
-    from epiteam_network_etl_functions_spark.plans.mobility import (
-        impute_neighbour_frequency_labels,
     )
 
     homes = spark.createDataFrame(
@@ -193,21 +191,44 @@ def test_neighbour_frequency_labels_matches_arrays(spark):
             Row(a_id="C", b_id="D"), Row(a_id="F", b_id="G"),
         ]
     )
-    labels = connected_components(edges)
+    members = spark.createDataFrame(
+        [Row(node_id=d, component_id="ABCD") for d in "ABCD"]
+        + [Row(node_id=d, component_id="FG") for d in "FG"]
+    )
     via_labels = {
         r["caid"]: r["home_ageb"]
-        for r in impute_neighbour_frequency_labels(homes, labels, rounds=3).collect()
+        for r in impute_neighbour_frequency(homes, connected_components(edges)).collect()
     }
     via_arrays = {
         r["caid"]: r["home_ageb"]
-        for r in impute_neighbour_frequency(
-            homes, components_as_arrays(labels), rounds=3
-        ).collect()
+        for r in impute_neighbour_frequency(homes, members).collect()
     }
     assert via_labels == via_arrays
     assert via_labels["D"] == "0901200010010"
     assert via_labels["G"] == "1501200010020"
     assert via_labels["E"] == SENTINEL_AGEB_13
+
+
+def test_pings_impute_neighbours_plan_has_no_member_arrays(spark):
+    """The registered query hands its hash-bucket labels to the imputer
+    as they are: no per-component collect_set array that would only be
+    exploded back into rows."""
+    from conftest import PARITY_SF_DIR
+    from epiteam_network_etl_functions_spark.session import prep
+    from epiteam_network_etl_functions_spark.workload.pings import (
+        pings_impute_neighbours,
+    )
+
+    prep(spark)  # the query's own prep() must not turn AQE back on
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = pings_impute_neighbours(spark, PARITY_SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert "collect_set" not in plan, plan
+    assert "Generate explode" not in plan, plan
 
 
 _CODES = ("0901200010010", "0901200010020", "1501200010020")
@@ -277,16 +298,9 @@ def _populations(draw):
 )
 @given(pop=_populations(), rounds=st.integers(0, 4))
 def test_one_pass_imputation_matches_multi_round_model(spark, pop, rounds):
-    """Equality lock for the one-pass imputation: both entry points give
-    what the old multi-round loop gives, for every round count (0
-    disables imputation)."""
-    from epiteam_network_etl_functions_spark.operators.components import (
-        components_as_arrays,
-    )
-    from epiteam_network_etl_functions_spark.plans.mobility import (
-        impute_neighbour_frequency_labels,
-    )
-
+    """Equality lock for the one-pass imputation: one call gives what the
+    old multi-round loop gives, for every positive round count; round 0
+    is the caller skipping the call (cli.gen_tables on --impute-rounds 0)."""
     homes, labels = pop
     homes_df = spark.createDataFrame(
         sorted(homes.items()), "caid string, home_ageb string"
@@ -295,14 +309,10 @@ def test_one_pass_imputation_matches_multi_round_model(spark, pop, rounds):
         sorted(labels.items()), "node_id string, component_id string"
     )
     want = _multi_round_model(homes, labels, rounds)
-    via_labels = impute_neighbour_frequency_labels(homes_df, labels_df, rounds=rounds)
-    via_arrays = impute_neighbour_frequency(
-        homes_df, components_as_arrays(labels_df), rounds=rounds
-    )
-    for out in (via_labels, via_arrays):
-        rows = out.collect()
-        assert len(rows) == len(homes)
-        assert {r["caid"]: r["home_ageb"] for r in rows} == want
+    out = homes_df if rounds == 0 else impute_neighbour_frequency(homes_df, labels_df)
+    rows = out.collect()
+    assert len(rows) == len(homes)
+    assert {r["caid"]: r["home_ageb"] for r in rows} == want
 
 
 def test_locate_pings_broadcast_join(spark):
